@@ -1,32 +1,81 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
-/** Deterministic release of `localCheckpoint` blocks.
+/** Deterministic release of materialized intermediates.
   *
   * The builders/sinks/iterative operators in this library truncate
   * multi-consumer or per-round lineage with EAGER `localCheckpoint`
   * (plan-canonicalization rationale at
-  * [[graft.dedup.Dedup.ngramJaccardPairs]]). A checkpoint's blocks are
-  * normally retired by the ContextCleaner when the frame is GC'd — fine
-  * for a one-shot batch query, but GC-timing-dependent: a long-running
-  * driver (a streaming admission sink, a bench session, repeated graph
-  * builds) accretes MEMORY_AND_DISK blocks between GCs. Owners therefore
-  * release their checkpoints HERE, explicitly, as soon as every consumer
-  * has materialized — restoring the old persist/unpersist lifecycle's
-  * determinism (StreamingCacheHygieneSpec / DedupSpec / GraphSpec pin
+  * [[graft.dedup.Dedup.ngramJaccardPairs]]) or pin a multi-scan input
+  * with `persist`. Left to the ContextCleaner, a checkpoint's blocks are
+  * retired only when the frame is GC'd — GC-timing-dependent: a
+  * long-running driver (a streaming admission sink, a bench session,
+  * repeated graph builds) accretes MEMORY_AND_DISK blocks between GCs.
+  * Owners therefore release them explicitly, as soon as every consumer has
+  * materialized (StreamingCacheHygieneSpec / DedupSpec / GraphSpec pin
   * non-accretion).
   *
-  * A released checkpoint cannot be recomputed; that is safe exactly when
-  * every consumer has already materialized its own result, and it is the
-  * same consequence as the block's executor dying (the documented
-  * localCheckpoint fault-tolerance trade). Consequently every frame a
-  * public builder RETURNS that passes through released checkpoints is
-  * one-shot: consume it (it arrives internally persisted+materialized),
-  * don't unpersist-and-recompute it.
+  * SCOPE. [[scope]] owns that lifecycle for straight-line code: every
+  * frame pinned through its [[Scope]] — by eager `localCheckpoint`
+  * ([[Scope.checkpoint]]), by `persist` ([[Scope.persist]]), or adopted
+  * already cached ([[Scope.adopt]], e.g. a pair builder's returned
+  * relation) — is released when the block exits, whether it returns or
+  * throws. Iterative loops that retire one round's checkpoint per round
+  * call [[releaseLocal]] directly.
+  *
+  * ONE-SHOT RESULT CONTRACT. A released checkpoint cannot be recomputed;
+  * that is safe exactly when every consumer has already materialized its
+  * own result, and it is the same consequence as the block's executor
+  * dying (the documented localCheckpoint fault-tolerance trade). A
+  * builder's result is therefore made with [[Scope.result]] — persisted
+  * and counted INSIDE the block, so it survives the block's release — and
+  * every such frame a public builder returns is one-shot: consume it from
+  * the cache and `unpersist` it when done; do not unpersist-and-recompute
+  * it, and treat cache-block loss like executor loss (re-run the builder).
   */
 object Blocks {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The frames one [[scope]] block owns; see the object doc. */
+  final class Scope private[Blocks] () {
+    private var releases = List.empty[() => Unit]
+
+    /** Eager `localCheckpoint` of `df`; its blocks are released at exit. */
+    def checkpoint(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(true)
+      releases ::= (() => releaseLocal(c))
+      c
+    }
+
+    /** `persist` of `df` at the default cache level (lazy, as persist is);
+      * unpersisted at exit. */
+    def persist(df: DataFrame): DataFrame = adopt(df.persist())
+
+    /** Take ownership of an already-cached frame; unpersisted at exit. */
+    def adopt(df: DataFrame): DataFrame = {
+      releases ::= (() => df.unpersist(false))
+      df
+    }
+
+    /** The block's result: persisted and materialized now, and NOT released
+      * at exit — the caller owns it under the one-shot contract. */
+    def result(df: DataFrame): DataFrame = {
+      val r = df.persist(StorageLevel.MEMORY_AND_DISK)
+      r.count()
+      r
+    }
+
+    private[Blocks] def release(): Unit = releases.foreach(_())
+  }
+
+  /** Run `body` with a fresh [[Scope]] and release everything pinned
+    * through it when `body` returns or throws. */
+  def scope[A](body: Scope => A): A = {
+    val s = new Scope
+    try body(s) finally s.release()
+  }
 
   /** Unpersist the materialized RDD blocks behind each frame's
     * `LogicalRDD` leaves NOW instead of waiting for the ContextCleaner.

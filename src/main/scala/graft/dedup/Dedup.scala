@@ -3,7 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.Blocks
 
 /** Near-duplicate detection for training-data pipelines: exact hash dedup,
   * MinHash+LSH, SimHash, and exact shingle-Jaccard verification.
@@ -26,18 +27,14 @@ import org.apache.spark.storage.StorageLevel
   *  - The hashes are content-derived (md5), not JVM-dependent, so results
   *    are reproducible across engines/runs — and expressible in the DuckDB
   *    oracle.
-  *  - The shingle set is computed once and persisted across the candidate
-  *    and verify stages (two consumers of the same expensive subtree).
+  *  - The candidate docs' shingle set is computed once and checkpointed
+  *    for the three sides of the verify join (both set sides and the size
+  *    aggregate).
   *
-  * ONE-SHOT RESULT CONTRACT (every public pair builder here and in
-  * [[graft.sim.CosineLsh]]): the returned frame arrives internally
-  * persisted AND materialized, but its lineage passes through
-  * localCheckpoint blocks the builder has already released
-  * ([[graft.Blocks.releaseLocal]] — the plan-truncation discipline).
-  * Consume it from the cache and `unpersist` when done; do NOT
-  * unpersist-then-recompute it, and treat cache-block loss like executor
-  * loss (re-run the builder). This is the documented localCheckpoint
-  * fault-tolerance trade, confined to builder-owned intermediates.
+  * Every public pair builder here, in [[graft.sim.CosineLsh]] and in
+  * [[graft.mm.Multimodal]] runs in one [[graft.Blocks.scope]]: its
+  * intermediates are released when it returns or throws, and its result
+  * follows the one-shot result contract stated there.
   */
 object Dedup {
   /** Char n-gram shingle size; 8 is enough to make random collisions rare
@@ -121,13 +118,6 @@ object Dedup {
       .select(col("doc_id") +:
         (0 until k).map(i => col("sig").getItem(i).as(s"m$i")): _*)
 
-  /** Release a localCheckpointed frame's materialized blocks NOW instead
-    * of waiting for the ContextCleaner — see [[graft.Blocks.releaseLocal]]
-    * (the shared implementation; kept as an alias because every dedup
-    * builder and its Scaladoc reference this name). */
-  private[graft] def releaseLocal(dfs: DataFrame*): Unit =
-    graft.Blocks.releaseLocal(dfs: _*)
-
   /** Word-n-gram Jaccard near-dup pairs: LSH candidates from scan-side
     * word MinHash, exact Jaccard computed only on shingle sets of docs
     * that appear in a candidate pair.
@@ -141,31 +131,13 @@ object Dedup {
     * clock, not data (r14 A/B on the sibling incremental pipeline:
     * 4.2-5.0 s → 1.4 s at sf0.1, identical pairs). Checkpointing cuts each
     * consumer's plan back to a leaf. Same executor-memory footprint as the
-    * old pins; the blocks are released by the ContextCleaner when the
-    * frames are GC'd (the iterative-graph discipline). Fault-tolerance
-    * trade (lost executor = failed job, no lineage recompute) is the
-    * documented localCheckpoint cost and acceptable for intra-job
-    * intermediates. */
+    * old pins; the builder's [[graft.Blocks.scope]] releases the blocks as
+    * soon as the result is materialized. Fault-tolerance trade (lost
+    * executor = failed job, no lineage recompute) is the documented
+    * localCheckpoint cost and acceptable for intra-job intermediates. */
   def ngramJaccardPairs(
-      docs: DataFrame, threshold: Double = 0.5, n: Int = 3): DataFrame = {
-    val bands = bandKeys(wordMinHashSignatures(docs, n = n)).localCheckpoint(true)
-    val cand = candidatePairs(bands).localCheckpoint(true)
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    // shingle sets only ever exist for candidate docs; the candidate set
-    // can reach 30-50% of a dup-heavy corpus, so the semi-join carries no
-    // broadcast hint — AQE picks the strategy from its actual size
-    val candSh = wordShingles(
-      docs.join(candDocs, Seq("doc_id"), "left_semi"), n = n)
-      .localCheckpoint(true)
-    val result = jaccard(cand, candSh)
-      .where(col("jaccard") >= lit(threshold))
-      .orderBy("doc_a", "doc_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    releaseLocal(bands, cand, candSh)
-    result
-  }
+      docs: DataFrame, threshold: Double = 0.5, n: Int = 3): DataFrame =
+    ngramPairs(docs, threshold, n, JaccardScore)
 
   /** Word-n-gram CONTAINMENT near-dup pairs: same LSH candidate machinery
     * as [[ngramJaccardPairs]], but scored with directional containment
@@ -178,24 +150,19 @@ object Dedup {
     * candidates"; the oracle replays the identical band machinery, making
     * engine and oracle agree on the candidate universe by construction. */
   def ngramContainmentPairs(
-      docs: DataFrame, threshold: Double = 0.6, n: Int = 3): DataFrame = {
-    // localCheckpoint, not persist: plan-truncation rationale at
-    // [[ngramJaccardPairs]]
-    val bands = bandKeys(wordMinHashSignatures(docs, n = n)).localCheckpoint(true)
-    val cand = candidatePairs(bands).localCheckpoint(true)
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val candSh = wordShingles(
-      docs.join(candDocs, Seq("doc_id"), "left_semi"), n = n)
-      .localCheckpoint(true)
-    val result = containment(cand, candSh)
-      .where(col("containment") >= lit(threshold))
-      .orderBy("doc_a", "doc_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    releaseLocal(bands, cand, candSh)
-    result
-  }
+      docs: DataFrame, threshold: Double = 0.6, n: Int = 3): DataFrame =
+    ngramPairs(docs, threshold, n, ContainmentScore)
+
+  /** The body of both word-n-gram builders: bands and candidates are
+    * checkpointed (rationale at [[ngramJaccardPairs]]), then `score`d
+    * over the word shingle sets of candidate docs only. */
+  private def ngramPairs(
+      docs: DataFrame, threshold: Double, n: Int, score: Score): DataFrame =
+    Blocks.scope { s =>
+      val bands = s.checkpoint(bandKeys(wordMinHashSignatures(docs, n = n)))
+      val cand = s.checkpoint(candidatePairs(bands))
+      verifiedTail(s, docs, cand, wordShingles(_, n = n), score, threshold)
+    }
 
   /** Delta-aware containment near-dedup: the same banded candidate
     * machinery as [[ngramContainmentPairs]], but candidate generation only
@@ -208,15 +175,25 @@ object Dedup {
   def ngramContainmentPairsIncremental(
       history: DataFrame, delta: DataFrame,
       threshold: Double = 0.6, n: Int = 3,
-      historySigs: Option[DataFrame] = None): DataFrame = {
-    // bandsH is consumed exactly once (the dh join): never pin the
-    // corpus-sized standing side for a single scan
-    val bandsH = bandKeys(
-        historySigs.getOrElse(wordMinHashSignatures(history, n = n)))
-    // delta-side intermediates localCheckpoint (plan-truncation rationale
-    // at [[ngramJaccardPairs]]); supplied standing sides stay lazy
-    val bandsD = bandKeys(wordMinHashSignatures(delta, n = n))
-      .localCheckpoint(true)
+      historySigs: Option[DataFrame] = None): DataFrame =
+    Blocks.scope { s =>
+      // bandsH is consumed exactly once (the dh join): never pin the
+      // corpus-sized standing side for a single scan
+      val bandsH = bandKeys(
+          historySigs.getOrElse(wordMinHashSignatures(history, n = n)))
+      // delta-side intermediates are checkpointed (rationale at
+      // [[ngramJaccardPairs]]); supplied standing sides stay lazy
+      val bandsD = s.checkpoint(bandKeys(wordMinHashSignatures(delta, n = n)))
+      val cand = s.checkpoint(deltaCandidates(bandsD, bandsH))
+      verifiedTail(s, history.unionByName(delta), cand,
+        wordShingles(_, n = n), ContainmentScore, threshold)
+    }
+
+  /** Band-bucket candidate pairs that touch the delta, the shared
+    * candidate step of the MinHash-band incrementals: delta×history (every
+    * collision, canonicalized to doc_a < doc_b) ∪ delta×delta (ordered),
+    * distinct. */
+  private def deltaCandidates(bandsD: DataFrame, bandsH: DataFrame): DataFrame = {
     val dh = bandsD.as("a").join(bandsH.as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
           col("a.doc_id") =!= col("b.doc_id"))
@@ -226,24 +203,27 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val cand = dh.union(dd).distinct().localCheckpoint(true)
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val candSh = wordShingles(
-      history.unionByName(delta).join(candDocs, Seq("doc_id"), "left_semi"), n = n)
-      .localCheckpoint(true)
-    val result = containment(cand, candSh)
-      .where(col("containment") >= lit(threshold))
-      .orderBy("doc_a", "doc_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    releaseLocal(bandsD, cand, candSh)
-    result
+    dh.union(dd).distinct()
   }
+
+  /** A shingle-set pair score: its output column and its value from the
+    * intersection size |A∩B| and the set sizes |A|, |B|. */
+  private final case class Score(name: String, value: (Column, Column, Column) => Column)
+  private val JaccardScore = Score("jaccard", (i, na, nb) => i / (na + nb - i))
+  private val ContainmentScore = Score("containment", (i, na, nb) => i / least(na, nb))
 
   /** Exact directional containment |A∩B| / min(|A|,|B|) for candidate
     * pairs over the shingle sets (Broder's containment measure). */
-  def containment(cand: DataFrame, sh: DataFrame): DataFrame = {
+  def containment(cand: DataFrame, sh: DataFrame): DataFrame =
+    scored(cand, sh, ContainmentScore)
+
+  /** Exact Jaccard for given candidate pairs over the shingle sets. */
+  def jaccard(cand: DataFrame, sh: DataFrame): DataFrame =
+    scored(cand, sh, JaccardScore)
+
+  /** Candidate pairs with their shingle intersection count and both set
+    * sizes, scored: (doc_a, doc_b, <score.name>) rounded to 6 places. */
+  private def scored(cand: DataFrame, sh: DataFrame, score: Score): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val s1 = sh.as("s1")
     val s2 = sh.as("s2")
@@ -256,7 +236,25 @@ object Dedup {
       .join(sizes.as("na"), col("doc_a") === col("na.doc_id"))
       .join(sizes.as("nb"), col("doc_b") === col("nb.doc_id"))
       .select(col("doc_a"), col("doc_b"),
-        round(col("i") / least(col("na.n"), col("nb.n")), 6).as("containment"))
+        round(score.value(col("i"), col("na.n"), col("nb.n")), 6).as(score.name))
+  }
+
+  /** Shared verify tail of the shingle-scored builders: shingle sets for
+    * the candidate docs only (checkpointed — three join sides read them),
+    * scored, cut at `threshold`, and returned as the scope's result. The
+    * semi-join prunes the corpus before the explode; the candidate docs
+    * can reach 30-50% of a dup-heavy corpus, so it carries no broadcast
+    * hint — AQE picks the strategy from its actual size. */
+  private def verifiedTail(
+      s: Blocks.Scope, docs: DataFrame, cand: DataFrame,
+      shingle: DataFrame => DataFrame, score: Score,
+      threshold: Double): DataFrame = {
+    val candDocs = cand.select(col("doc_a").as("doc_id"))
+      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
+    val sh = s.checkpoint(shingle(docs.join(candDocs, Seq("doc_id"), "left_semi")))
+    s.result(scored(cand, sh, score)
+      .where(col(score.name) >= lit(threshold))
+      .orderBy("doc_a", "doc_b"))
   }
 
   /** Per-doc MinHash signature computed scan-side by the native
@@ -297,23 +295,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact Jaccard for given candidate pairs over the shingle sets. */
-  def jaccard(cand: DataFrame, sh: DataFrame): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val s1 = sh.as("s1")
-    val s2 = sh.as("s2")
-    val inter = cand.as("c")
-      .join(s1, col("c.doc_a") === col("s1.doc_id"))
-      .join(s2, col("c.doc_b") === col("s2.doc_id") && col("s2.shingle") === col("s1.shingle"))
-      .groupBy(col("c.doc_a"), col("c.doc_b"))
-      .agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.as("na"), col("doc_a") === col("na.doc_id"))
-      .join(sizes.as("nb"), col("doc_b") === col("nb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("i") / (col("na.n") + col("nb.n") - col("i")), 6).as("jaccard"))
-  }
-
   /** Minimum number of equal signature coordinates a candidate pair must
     * show to reach the exact verify — the standard LSH two-stage filter.
     * Signature agreement (fraction of equal minhashes) is an unbiased
@@ -332,22 +313,19 @@ object Dedup {
     * (semi-join), so verify cost scales with *plausible* collisions, not
     * corpus size and not raw band-bucket collisions. */
   def minHashLshPairs(docs: DataFrame, threshold: Double = 0.8,
-      precomputedSigs: Option[DataFrame] = None): DataFrame = {
-    // Signatures feed banding AND both sides of the agreement filter; in
-    // DERIVED mode they are localCheckpointed (plan-truncation rationale
-    // at [[ngramJaccardPairs]]) so each of the three consumers reads
-    // materialized blocks behind a leaf-sized plan. Callers that need the
-    // signatures themselves (estimator evals, standing indexes) pass a
-    // relation via `precomputedSigs`; that side is caller-owned — never
-    // pinned, never materialized here.
-    val sigs = precomputedSigs.getOrElse(
-      minHashSignatures(docs).localCheckpoint(true))
-    val bands = bandKeys(sigs).localCheckpoint(true)
-    val result = verifiedPairs(docs, candidatePairs(bands), sigs, threshold)
-    releaseLocal(bands)
-    if (precomputedSigs.isEmpty) releaseLocal(sigs)
-    result
-  }
+      precomputedSigs: Option[DataFrame] = None): DataFrame =
+    Blocks.scope { s =>
+      // Signatures feed banding AND both sides of the agreement filter; in
+      // DERIVED mode they are checkpointed (rationale at
+      // [[ngramJaccardPairs]]) so each of the three consumers reads
+      // materialized blocks behind a leaf-sized plan. Callers that need the
+      // signatures themselves (estimator evals, standing indexes) pass a
+      // relation via `precomputedSigs`; that side is caller-owned — never
+      // pinned, never materialized here.
+      val sigs = precomputedSigs.getOrElse(s.checkpoint(minHashSignatures(docs)))
+      val bands = s.checkpoint(bandKeys(sigs))
+      verifiedPairs(s, docs, candidatePairs(bands), sigs, threshold)
+    }
 
   /** Incremental near-dup detection — the 100 TB production shape: dedup a
     * DELTA batch against an already-ingested history WITHOUT re-hashing or
@@ -364,89 +342,56 @@ object Dedup {
   def minHashLshPairsIncremental(
       history: DataFrame, delta: DataFrame, threshold: Double = 0.8,
       historySigs: Option[DataFrame] = None,
-      historyBands: Option[DataFrame] = None): DataFrame = {
-    // The history signatures are read up to three times below (the band
-    // derivation plus both verify sides). In DERIVED mode re-computing
-    // them means re-scanning corpus text, so the one-time localCheckpoint
-    // of the narrow 16-long rows is worth it — and it cuts every
-    // consumer's analyzed plan back to a leaf (plan-truncation rationale
-    // at [[ngramJaccardPairs]]). A SUPPLIED standing table is already a
-    // cheap narrow scan that must be neither pinned nor materialized
-    // (corpus-sized executor memory) — the caller owns its lifecycle.
-    val ownedSigsH = historySigs.isEmpty
-    val sigsH = {
-      val s0 = historySigs.getOrElse(minHashSignatures(history))
-      if (ownedSigsH) s0.localCheckpoint(true) else s0
+      historyBands: Option[DataFrame] = None): DataFrame =
+    Blocks.scope { s =>
+      // The history signatures are read up to three times below (the band
+      // derivation plus both verify sides). In DERIVED mode re-computing
+      // them means re-scanning corpus text, so the one-time checkpoint of
+      // the narrow 16-long rows is worth it — and it cuts every consumer's
+      // analyzed plan back to a leaf (rationale at [[ngramJaccardPairs]]).
+      // A SUPPLIED standing table is already a cheap narrow scan that must
+      // be neither pinned nor materialized (corpus-sized executor memory)
+      // — the caller owns its lifecycle.
+      val sigsH = historySigs.getOrElse(s.checkpoint(minHashSignatures(history)))
+      val sigsD = s.checkpoint(minHashSignatures(delta))
+      // consumed exactly once (the dh join) — materializing would only add
+      // a pass; it pipelines off sigsH / the standing scan
+      val bandsH = historyBands.getOrElse(bandKeys(sigsH))
+      val bandsD = s.checkpoint(bandKeys(sigsD))
+      // by NAME: caller-provided history signature tables may order their
+      // columns differently than minHashSignatures emits them. The verify
+      // stage scans this union twice (both sides of the agreement join); in
+      // derived mode both inputs are this call's own checkpointed blocks,
+      // so re-scanning the union is two cheap leaf reads — no second pin
+      // (round 11's 3.80 → 5.36 s un-pin regression re-evaluated FULL
+      // upstream pipelines per scan; checkpointed leaves removed that
+      // hazard).
+      verifiedPairs(s, history.unionByName(delta), deltaCandidates(bandsD, bandsH),
+        sigsH.unionByName(sigsD), threshold)
     }
-    val sigsD = minHashSignatures(delta).localCheckpoint(true)
-    // consumed exactly once (the dh join) — materializing would only add
-    // a pass; it pipelines off sigsH / the standing scan
-    val bandsH = historyBands.getOrElse(bandKeys(sigsH))
-    val bandsD = bandKeys(sigsD).localCheckpoint(true)
-    val dh = bandsD.as("a").join(bandsH.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
-    val dd = bandsD.as("a").join(bandsD.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val cand0 = dh.union(dd).distinct()
-    // by NAME: caller-provided history signature tables may order their
-    // columns differently than minHashSignatures emits them. The verify
-    // stage scans this union twice (both sides of the agreement join); in
-    // derived mode both inputs are this call's own checkpointed blocks,
-    // so re-scanning the union is two cheap leaf reads — no second pin
-    // (round 11's 3.80 → 5.36 s un-pin regression re-evaluated FULL
-    // upstream pipelines per scan; checkpointed leaves removed that
-    // hazard). A SUPPLIED standing side stays untouched — the caller owns
-    // its lifecycle (round-11 rule).
-    val sigs = sigsH.unionByName(sigsD)
-    val result = verifiedPairs(history.unionByName(delta), cand0, sigs, threshold)
-    releaseLocal(sigsD, bandsD)
-    if (ownedSigsH) releaseLocal(sigsH)
-    result
-  }
 
   /** Shared verify tail of the MinHash pipelines: signature-agreement
     * pre-filter, shingle materialization for surviving docs only, exact
     * Jaccard, threshold cut. `sigs` must cover every doc id appearing in
     * `cand0`. */
   private def verifiedPairs(
-      docs: DataFrame, cand0: DataFrame, sigs: DataFrame,
+      s: Blocks.Scope, docs: DataFrame, cand0: DataFrame, sigs: DataFrame,
       threshold: Double): DataFrame = {
     // Stage 1 candidates arrive raw from band buckets. Stage 2: keep only
     // pairs whose signature agreement is plausibly at the threshold —
-    // computed from the already-persisted signatures, zero extra corpus
+    // computed from the already-materialized signatures, zero extra corpus
     // scans.
     val agree = (0 until NumHashes)
       .map(i => when(col(s"sa.m$i") === col(s"sb.m$i"), 1).otherwise(0))
       .reduce(_ + _)
-    // localCheckpoint, not persist: cand feeds three downstream subtrees
-    // and sh three join sides — behind a pin each reference re-inlines
-    // the full pipeline into the consumer's plan and canonicalization
-    // dominates (plan-truncation rationale at [[ngramJaccardPairs]]).
-    val cand = cand0
+    // checkpointed, not persisted: cand feeds three downstream subtrees
+    // (rationale at [[ngramJaccardPairs]])
+    val cand = s.checkpoint(cand0
       .join(sigs.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sigs.as("sb"), col("doc_b") === col("sb.doc_id"))
       .where(agree >= lit(minAgree(NumHashes, threshold)))
-      .select("doc_a", "doc_b")
-      .localCheckpoint(true)
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    // Shingle sets for surviving candidate docs only. The semi-join prunes
-    // the corpus before the explode; candDocs can reach 30-50% of a
-    // dup-heavy corpus, so no broadcast hint — AQE decides from size.
-    val sh = shingles(docs.join(candDocs, Seq("doc_id"), "left_semi"))
-      .localCheckpoint(true)
-    val result = jaccard(cand, sh)
-      .where(col("jaccard") >= lit(threshold))
-      .orderBy("doc_a", "doc_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count() // materialize the (tiny) result eagerly
-    releaseLocal(cand, sh)
-    result
+      .select("doc_a", "doc_b"))
+    verifiedTail(s, docs, cand, shingles(_), JaccardScore, threshold)
   }
 
   /** Size gate for [[connectedComponents]]: a pair relation at or below
@@ -495,54 +440,59 @@ object Dedup {
     if (nPairs <= localThreshold) return localConnectedComponents(pairs)
     val parts = math.max(1, math.min((nPairs / 100000L).toInt + 1,
       pairs.sparkSession.sparkContext.defaultParallelism))
-    // undirected: propagate labels both ways
-    val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      .repartition(parts)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .repartition(parts)
-      .localCheckpoint(true)
-    // Convergence probe: labels only ever DECREASE under min-propagation,
-    // so the label sum is strictly monotone until the fixpoint — one tiny
-    // aggregate per round instead of a change-counting self-join.
-    // DECIMAL(38,0): 10^12 nodes x 10^12 ids must not wrap a long.
-    def lblSum(df: DataFrame): java.math.BigDecimal = {
-      val r = df.agg(sum(col("lbl").cast(DecimalType(38, 0)))).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    }
-    var prevSum = lblSum(labels)
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      // neighbor-min step: each node takes the min of its own and its
-      // neighbors' labels. localCheckpoint(eager) materializes AND cuts
-      // the plan back to the checkpointed blocks — constant per-round
-      // planning cost.
-      //
-      // Measured dead end, do not re-add: a pointer-doubling chase
-      // (label := label's label, O(log diameter) rounds) was 14x SLOWER
-      // here at 1M edges — the chase join's key distribution degenerates
-      // as components converge (a giant component hashes every row to one
-      // label), and the extra per-round shuffle + checkpoint swamps the
-      // round savings; dup-cluster graphs have tiny diameters anyway.
-      val next = edges.join(labels, edges("b") === labels("node"))
-        .select(edges("a").as("node"), col("lbl"))
-        .union(labels)
-        .groupBy("node").agg(min(col("lbl")).as("lbl"))
+    Blocks.scope { scope =>
+      // undirected: propagate labels both ways
+      val edges = scope.persist(
+        pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+          .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
+          .repartition(parts))
+      var labels = edges.select(col("a").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl"))
+        .repartition(parts)
         .localCheckpoint(true)
-      val s = lblSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = next
-      round += 1
+      // Convergence probe: labels only ever DECREASE under min-propagation,
+      // so the label sum is strictly monotone until the fixpoint — one tiny
+      // aggregate per round instead of a change-counting self-join.
+      // DECIMAL(38,0): 10^12 nodes x 10^12 ids must not wrap a long.
+      def lblSum(df: DataFrame): java.math.BigDecimal = {
+        val r = df.agg(sum(col("lbl").cast(DecimalType(38, 0)))).head()
+        if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
+      }
+      var prevSum = lblSum(labels)
+      var converged = false
+      var round = 0
+      while (!converged && round < maxRounds) {
+        // neighbor-min step: each node takes the min of its own and its
+        // neighbors' labels. localCheckpoint(eager) materializes AND cuts
+        // the plan back to the checkpointed blocks — constant per-round
+        // planning cost.
+        //
+        // Measured dead end, do not re-add: a pointer-doubling chase
+        // (label := label's label, O(log diameter) rounds) was 14x SLOWER
+        // here at 1M edges — the chase join's key distribution degenerates
+        // as components converge (a giant component hashes every row to one
+        // label), and the extra per-round shuffle + checkpoint swamps the
+        // round savings; dup-cluster graphs have tiny diameters anyway.
+        val next = edges.join(labels, edges("b") === labels("node"))
+          .select(edges("a").as("node"), col("lbl"))
+          .union(labels)
+          .groupBy("node").agg(min(col("lbl")).as("lbl"))
+          .localCheckpoint(true)
+        val s = lblSum(next)
+        converged = s.compareTo(prevSum) == 0
+        prevSum = s
+        Blocks.releaseLocal(labels) // next is materialized; labels is dead
+        labels = next
+        round += 1
+      }
+      if (!converged) {
+        Blocks.releaseLocal(labels)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxRounds rounds")
+      }
+      // the last round's checkpoint backs the result (ContextCleaner-retired)
+      labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds")
-    edges.unpersist(false)
-    labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
   /** Driver-side union-find for small pair relations (below
@@ -619,63 +569,54 @@ object Dedup {
     * re-hashing the history. */
   def simHashPairsIncremental(
       history: DataFrame, delta: DataFrame, maxHamming: Int = 3,
-      historyBands: Option[DataFrame] = None): DataFrame = {
-    // consumed exactly once (the delta × history collide) — persisting
-    // the CORPUS-sized standing side would add a materialization pass
-    // and pin standing state to executor memory for nothing (the same
-    // single-use pin the media-incr A/B measured as pure overhead)
-    val bh = historyBands.getOrElse(simHashBands(history))
-    // localCheckpoint: bd feeds three join sides (plan-truncation
-    // rationale at [[ngramJaccardPairs]])
-    val bd = simHashBands(delta).localCheckpoint(true)
-    def collide(l: DataFrame, r0: DataFrame, ordered: Boolean) = {
-      val cond0 = col("a.band") === col("b.band") &&
-        col("a.band_val") === col("b.band_val")
-      val cond = if (ordered) cond0 && col("a.doc_id") < col("b.doc_id")
-      else cond0 && col("a.doc_id") =!= col("b.doc_id")
-      l.as("a").join(r0.as("b"), cond)
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
-          // hamming is symmetric: safe to compute before the id ordering
-          bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
+      historyBands: Option[DataFrame] = None): DataFrame =
+    Blocks.scope { s =>
+      // consumed exactly once (the delta × history collide) — persisting
+      // the CORPUS-sized standing side would add a materialization pass
+      // and pin standing state to executor memory for nothing (the same
+      // single-use pin the media-incr A/B measured as pure overhead)
+      val bh = historyBands.getOrElse(simHashBands(history))
+      // checkpointed: bd feeds three join sides (rationale at
+      // [[ngramJaccardPairs]])
+      val bd = s.checkpoint(simHashBands(delta))
+      def collide(l: DataFrame, r0: DataFrame, ordered: Boolean) = {
+        val cond0 = col("a.band") === col("b.band") &&
+          col("a.band_val") === col("b.band_val")
+        val cond = if (ordered) cond0 && col("a.doc_id") < col("b.doc_id")
+        else cond0 && col("a.doc_id") =!= col("b.doc_id")
+        l.as("a").join(r0.as("b"), cond)
+          .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
+            greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
+            // hamming is symmetric: safe to compute before the id ordering
+            bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
+      }
+      s.result(collide(bd, bh, ordered = false)
+        .union(collide(bd, bd, ordered = true))
+        .distinct()
+        .where(col("hamming") <= lit(maxHamming))
+        .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
+        .orderBy("doc_a", "doc_b"))
     }
-    val result = collide(bd, bh, ordered = false)
-      .union(collide(bd, bd, ordered = true))
-      .distinct()
-      .where(col("hamming") <= lit(maxHamming))
-      .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
-      .orderBy("doc_a", "doc_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    releaseLocal(bd)
-    result
-  }
 
   /** SimHash near-dup pairs: candidates share one of 4 15-bit bands, then
     * Hamming distance (bit_count of xor) <= maxHamming. */
-  def simHashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    // localCheckpoint: both sides of the self-join would otherwise re-run
-    // the full token+vote pipeline, and a pin would re-inline it into the
-    // plan twice (rationale at [[ngramJaccardPairs]]). 4 rows/doc — small.
-    val banded = simHashBands(docs)
-      .localCheckpoint(true)
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val result = a.join(b,
-        col("a.band") === col("b.band") && col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("h_a"), col("b.simhash").as("h_b"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("h_a").bitwiseXOR(col("h_b"))))
-      .where(col("hamming") <= lit(maxHamming))
-      .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
-      .orderBy("doc_a", "doc_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    releaseLocal(banded)
-    result
-  }
+  def simHashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
+    Blocks.scope { s =>
+      // checkpointed: both sides of the self-join would otherwise re-run
+      // the full token+vote pipeline, and a pin would re-inline it into the
+      // plan twice (rationale at [[ngramJaccardPairs]]). 4 rows/doc — small.
+      val banded = s.checkpoint(simHashBands(docs))
+      s.result(banded.as("a").join(banded.as("b"),
+          col("a.band") === col("b.band") && col("a.band_val") === col("b.band_val") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          col("a.simhash").as("h_a"), col("b.simhash").as("h_b"))
+        .distinct()
+        .withColumn("hamming", bit_count(col("h_a").bitwiseXOR(col("h_b"))))
+        .where(col("hamming") <= lit(maxHamming))
+        .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
+        .orderBy("doc_a", "doc_b"))
+    }
 
   /** Shared prelude of the winnowing pair pipelines: per-doc winnowed
     * fingerprints (distinct), with the stop-fingerprint document-frequency
@@ -694,22 +635,6 @@ object Dedup {
       .select(col("doc_id"), col("fp"))
   }
 
-  /** Resemblance tail shared by the winnow pipelines: shared-fingerprint
-    * count ≥ minShared, resemblance = shared / (na + nb − shared). */
-  private def winnowResemblance(
-      pairs0: org.apache.spark.sql.RelationalGroupedDataset,
-      sizes: DataFrame, minShared: Int): DataFrame =
-    pairs0
-      .agg(count(lit(1)).as("shared"))
-      .where(col("shared") >= minShared)
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("shared"),
-        round(col("shared").cast("double")
-          / (col("na") + col("nb") - col("shared")).cast("double"), 6)
-          .as("resemblance"))
-      .orderBy("doc_a", "doc_b")
-
   /** Winnowing positional near-dup pairs (Schleimer–Wilkerson–Aiken,
     * SIGMOD'03 "Winnowing: Local Algorithms for Document Fingerprinting"
     * — public methodology): k-gram rolling hashes winnowed to one
@@ -718,22 +643,12 @@ object Dedup {
     * on the fingerprint or doc key; the fingerprint relation is ~1/w the
     * gram volume by construction. */
   def winnowPairs(docs: DataFrame, k: Int = 16, w: Int = 16,
-      dfCap: Int = 10, minShared: Int = 3): DataFrame = {
-    // localCheckpoint: keep feeds both self-join sides + the size
-    // aggregate (plan-truncation rationale at [[ngramJaccardPairs]])
-    val keep = winnowKeep(docs, k, w, dfCap)
-      .localCheckpoint(true)
-    val sizes = keep.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val result = winnowResemblance(
+      dfCap: Int = 10, minShared: Int = 3): DataFrame =
+    winnowResemblance(docs, k, w, dfCap, minShared) { keep =>
       keep.as("a").join(keep.as("b"),
           col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")),
-      sizes, minShared)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    releaseLocal(keep)
-    result
-  }
+        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    }
 
   /** Incremental winnow near-dup — the delta-vs-standing shape of
     * [[winnowPairs]]: only pairs with at least one DELTA side are
@@ -746,27 +661,39 @@ object Dedup {
     * corpus, exactly as a maintained standing df table would). */
   def winnowPairsIncremental(docs: DataFrame,
       deltaPred: Column => Column, k: Int = 16, w: Int = 16,
-      dfCap: Int = 10, minShared: Int = 3): DataFrame = {
-    // localCheckpoint: keep feeds both join sides + sizes (rationale at
-    // [[ngramJaccardPairs]])
-    val keep = winnowKeep(docs, k, w, dfCap)
-      .localCheckpoint(true)
-    val sizes = keep.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val keepD = keep.where(deltaPred(col("doc_id")))
-    val result = winnowResemblance(
-      keepD.as("a").join(keep.as("b"),
+      dfCap: Int = 10, minShared: Int = 3): DataFrame =
+    winnowResemblance(docs, k, w, dfCap, minShared) { keep =>
+      keep.where(deltaPred(col("doc_id"))).as("a").join(keep.as("b"),
           col("a.fp") === col("b.fp") &&
             col("a.doc_id") =!= col("b.doc_id") &&
             (!deltaPred(col("b.doc_id")) ||
               col("a.doc_id") < col("b.doc_id")))
         .groupBy(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")),
-      sizes, minShared)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    releaseLocal(keep)
-    result
-  }
+          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
+    }
+
+  /** Body of the winnow pipelines: the capped fingerprints are
+    * checkpointed (they feed both join sides + the size aggregate;
+    * rationale at [[ngramJaccardPairs]]), `pairs` groups the fingerprint
+    * collisions by (doc_a, doc_b), and pairs sharing ≥ minShared
+    * fingerprints are scored resemblance = shared / (na + nb − shared). */
+  private def winnowResemblance(
+      docs: DataFrame, k: Int, w: Int, dfCap: Int, minShared: Int)(
+      pairs: DataFrame => org.apache.spark.sql.RelationalGroupedDataset): DataFrame =
+    Blocks.scope { s =>
+      val keep = s.checkpoint(winnowKeep(docs, k, w, dfCap))
+      val sizes = keep.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      s.result(pairs(keep)
+        .agg(count(lit(1)).as("shared"))
+        .where(col("shared") >= minShared)
+        .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
+        .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+        .select(col("doc_a"), col("doc_b"), col("shared"),
+          round(col("shared").cast("double")
+            / (col("na") + col("nb") - col("shared")).cast("double"), 6)
+            .as("resemblance"))
+        .orderBy("doc_a", "doc_b"))
+    }
 
   /** Word-gram width for [[duplicatedSpanStats]]: long enough that random
     * token runs rarely collide even over a small vocabulary, short enough

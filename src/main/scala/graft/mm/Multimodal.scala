@@ -3,6 +3,8 @@ package graft.mm
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Blocks
+
 /** One media item: opaque bytes + typed metadata — the multimodal column
   * convention (image/audio/video as `binary`, never parsed by Catalyst). */
 final case class MediaRow(
@@ -323,28 +325,22 @@ object Multimodal {
 
   def phashNearDupPairs(spark: SparkSession, media: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 16, s"maxHamming out of range: $maxHamming")
-    // Persist the hash relation (id + one long — tiny): the kernel stage
-    // (decode + DCT in a real pHash) is the expensive pass, and the
-    // self-join must NOT run it once per side.
-    val ph = perceptualHashes(spark, media)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = hashBands(ph, maxHamming)
-    val lhs = bands.select(col("b"), col("nib"),
-      col("media_id").as("media_a"), col("phash").as("pa"))
-    val rhs = bands.select(col("b").as("b2"), col("nib").as("nib2"),
-      col("media_id").as("media_b"), col("phash").as("pb"))
-    // materialize-and-release, like Dedup.simHashPairs: the hash pin must
-    // not outlive the call (r11 advice — lazy returns leaked it)
-    val result = verifiedHammingPairs(
-      lhs.join(rhs,
-          col("b") === col("b2") && col("nib") === col("nib2") &&
-            col("media_a") < col("media_b"))
-        .select("media_a", "media_b", "pa", "pb"),
-      maxHamming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    ph.unpersist(false)
-    result
+    Blocks.scope { s =>
+      // Persist the hash relation (id + one long — tiny): the kernel stage
+      // (decode + DCT in a real pHash) is the expensive pass, and the
+      // self-join must NOT run it once per side.
+      val bands = hashBands(s.persist(perceptualHashes(spark, media)), maxHamming)
+      val lhs = bands.select(col("b"), col("nib"),
+        col("media_id").as("media_a"), col("phash").as("pa"))
+      val rhs = bands.select(col("b").as("b2"), col("nib").as("nib2"),
+        col("media_id").as("media_b"), col("phash").as("pb"))
+      s.result(verifiedHammingPairs(
+        lhs.join(rhs,
+            col("b") === col("b2") && col("nib") === col("nib2") &&
+              col("media_a") < col("media_b"))
+          .select("media_a", "media_b", "pa", "pb"),
+        maxHamming))
+    }
   }
 
   /** Incremental pHash near-dup: a new batch against an already-hashed
@@ -360,7 +356,6 @@ object Multimodal {
       spark: SparkSession, history: DataFrame, delta: DataFrame,
       maxHamming: Int, historyHashes: Option[DataFrame] = None): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 16, s"maxHamming out of range: $maxHamming")
-    import org.apache.spark.storage.StorageLevel
     // Cache ONLY the delta bands: they feed three scans (the history join
     // and both sides of the intra-delta self-join), so caching them also
     // guarantees the delta decode kernel runs once. The history side is
@@ -370,36 +365,31 @@ object Multimodal {
     // persists were measured as pure overhead: at 20k clips / 5% delta
     // the incremental pass dropped ~0.5 s, flipping it decisively below
     // the full recompute — see ScaleSmoke.mediaIncrSection.)
-    val phH = historyHashes.getOrElse(perceptualHashes(spark, history))
-    val phD = perceptualHashes(spark, delta)
-    val bandsD = hashBands(phD, maxHamming).persist(StorageLevel.MEMORY_AND_DISK)
-    val bandsH = hashBands(phH, maxHamming)
-    val dh = bandsD.as("a").join(bandsH.as("b"),
-        col("a.b") === col("b.b") && col("a.nib") === col("b.nib") &&
-          col("a.media_id") =!= col("b.media_id"))
-      .select(
-        least(col("a.media_id"), col("b.media_id")).as("media_a"),
-        greatest(col("a.media_id"), col("b.media_id")).as("media_b"),
-        when(col("a.media_id") < col("b.media_id"), col("a.phash"))
-          .otherwise(col("b.phash")).as("pa"),
-        when(col("a.media_id") < col("b.media_id"), col("b.phash"))
-          .otherwise(col("a.phash")).as("pb"))
-    val dd = bandsD.as("a").join(bandsD.as("b"),
-        col("a.b") === col("b.b") && col("a.nib") === col("b.nib") &&
-          col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("media_a"), col("b.media_id").as("media_b"),
-        col("a.phash").as("pa"), col("b.phash").as("pb"))
-    // Materialize the (delta-bounded) pair result while bandsD is cached,
-    // then release the band pin — same ownership shape as
-    // Dedup.simHashPairsIncremental. Without this the function returned
-    // lazily and bandsD stayed pinned forever; the streaming sink
-    // (toPhashDedupSink) calls this once per micro-batch and leaked one
-    // cached relation per batch (r11 advice).
-    val result = verifiedHammingPairs(dh.union(dd), maxHamming)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    bandsD.unpersist(false)
-    result
+    // The (delta-bounded) pair result is materialized while bandsD is
+    // cached; the band pin must not outlive the call — the streaming sink
+    // (toPhashDedupSink) calls this once per micro-batch.
+    Blocks.scope { s =>
+      val phH = historyHashes.getOrElse(perceptualHashes(spark, history))
+      val phD = perceptualHashes(spark, delta)
+      val bandsD = s.persist(hashBands(phD, maxHamming))
+      val bandsH = hashBands(phH, maxHamming)
+      val dh = bandsD.as("a").join(bandsH.as("b"),
+          col("a.b") === col("b.b") && col("a.nib") === col("b.nib") &&
+            col("a.media_id") =!= col("b.media_id"))
+        .select(
+          least(col("a.media_id"), col("b.media_id")).as("media_a"),
+          greatest(col("a.media_id"), col("b.media_id")).as("media_b"),
+          when(col("a.media_id") < col("b.media_id"), col("a.phash"))
+            .otherwise(col("b.phash")).as("pa"),
+          when(col("a.media_id") < col("b.media_id"), col("b.phash"))
+            .otherwise(col("a.phash")).as("pb"))
+      val dd = bandsD.as("a").join(bandsD.as("b"),
+          col("a.b") === col("b.b") && col("a.nib") === col("b.nib") &&
+            col("a.media_id") < col("b.media_id"))
+        .select(col("a.media_id").as("media_a"), col("b.media_id").as("media_b"),
+          col("a.phash").as("pa"), col("b.phash").as("pb"))
+      s.result(verifiedHammingPairs(dh.union(dd), maxHamming))
+    }
   }
 
   /** Frame sampling: slice the payload into `n` evenly-spaced fixed-size

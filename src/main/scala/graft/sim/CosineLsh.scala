@@ -2,8 +2,8 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.Blocks
 import graft.functions.VectorOps
 
 /** Cosine-threshold near-duplicate pairs at corpus scale: multi-table
@@ -33,12 +33,9 @@ import graft.functions.VectorOps
   * equi-joins on vec_id. At 1000 executors everything partitions by
   * bucket/id — there is no all-pairs stage anywhere.
   *
-  * ONE-SHOT RESULT CONTRACT: like the [[graft.dedup.Dedup]] pair builders,
-  * `nearDupPairs` / `nearDupPairsIncremental` return an internally
-  * persisted+materialized frame whose lineage passes through already
-  * released localCheckpoint blocks — consume it from the cache, don't
-  * unpersist-then-recompute (see the Dedup object doc for the full
-  * contract).
+  * Like the [[graft.dedup.Dedup]] pair builders, `nearDupPairs` /
+  * `nearDupPairsIncremental` run in one [[graft.Blocks.scope]] and return
+  * a one-shot result (contract in the Blocks doc).
   */
 object CosineLsh {
   val NumTables = 12
@@ -85,40 +82,39 @@ object CosineLsh {
     * pins [[BitsPerTable]] because its DuckDB mirror embeds those planes.
     *
     * The hashed corpus (`base`) feeds FOUR plan subtrees (both sides of
-    * the candidate self-join + both verify joins), so it is persisted for
-    * the duration of the computation and the small result is materialized
-    * eagerly — no recompute, and no cache leaked past the call. */
+    * the candidate self-join + both verify joins), so it is materialized
+    * once for the duration of the computation and the small result is
+    * materialized eagerly — no recompute, and no block kept past the
+    * call. */
   def nearDupPairs(
       emb: DataFrame, threshold: Double,
       bits: Option[Int] = None): DataFrame = {
     val b = bits.getOrElse(bitsFor(emb.count()))
-    // localCheckpoint, not persist: with a pin each of the four references
-    // re-inlines the full hash pipeline into the consumer's analyzed plan
-    // and per-action canonicalization dominates (see
-    // graft.dedup.Dedup.ngramJaccardPairs for the measured rationale);
-    // checkpointing cuts each consumer back to a leaf scan of the
-    // materialized blocks — same executor footprint, released by the
-    // ContextCleaner when the frame is GC'd.
-    val base = bucketed(emb, b).localCheckpoint(true)
-    val ids = base.select(col("vec_id"),
-      posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-    val cand = ids.as("a")
-      .join(ids.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-    val na = base.select(col("vec_id").as("id_a"), col("nv").as("nv_a"))
-    val nb = base.select(col("vec_id").as("id_b"), col("nv").as("nv_b"))
-    val result = cand.join(na, "id_a").join(nb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(dotFold(col("nv_a"), col("nv_b")), 6).as("score"))
-      .where(col("score") >= lit(threshold))
-      .orderBy("id_a", "id_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count() // materialize the (tiny) result eagerly
-    graft.dedup.Dedup.releaseLocal(base)
-    result
+    Blocks.scope { s =>
+      // localCheckpoint, not persist: with a pin each of the four references
+      // re-inlines the full hash pipeline into the consumer's analyzed plan
+      // and per-action canonicalization dominates (see
+      // graft.dedup.Dedup.ngramJaccardPairs for the measured rationale);
+      // checkpointing cuts each consumer back to a leaf scan of the
+      // materialized blocks — same executor footprint, released when the
+      // scope exits.
+      val base = s.checkpoint(bucketed(emb, b))
+      val ids = base.select(col("vec_id"),
+        posexplode(col("buckets")).as(Seq("tbl", "bucket")))
+      val cand = ids.as("a")
+        .join(ids.as("b"),
+          col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
+            col("a.vec_id") < col("b.vec_id"))
+        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
+        .distinct()
+      val na = base.select(col("vec_id").as("id_a"), col("nv").as("nv_a"))
+      val nb = base.select(col("vec_id").as("id_b"), col("nv").as("nv_b"))
+      s.result(cand.join(na, "id_a").join(nb, "id_b")
+        .select(col("id_a"), col("id_b"),
+          round(dotFold(col("nv_a"), col("nv_b")), 6).as("score"))
+        .where(col("score") >= lit(threshold))
+        .orderBy("id_a", "id_b"))
+    }
   }
 
   /** Incremental near-dup detection over embeddings — the same
@@ -138,46 +134,37 @@ object CosineLsh {
       bits: Option[Int] = None,
       historyBuckets: Option[DataFrame] = None): DataFrame = {
     val b = bits.getOrElse(bitsFor(history.count() + delta.count()))
-    // The history buckets are read three times below (the collision join
-    // and both verify sides). In DERIVED mode that's three re-hashings of
-    // the corpus, so the one-time pin pays; a SUPPLIED standing index is
-    // a cheap narrow scan that must not be pinned (corpus-sized executor
-    // memory) or unpersisted out from under the caller who owns it.
-    // Derived-mode sides localCheckpoint (plan-truncation rationale at
-    // [[nearDupPairs]]); a SUPPLIED standing index stays untouched — the
-    // caller owns its lifecycle.
-    val ownedH = historyBuckets.isEmpty
-    val baseH = {
-      val b0 = historyBuckets.getOrElse(bucketed(history, b))
-      if (ownedH) b0.localCheckpoint(true) else b0
+    Blocks.scope { s =>
+      // The history buckets are read three times below (the collision join
+      // and both verify sides). In DERIVED mode that's three re-hashings of
+      // the corpus, so the one-time checkpoint pays (rationale at
+      // [[nearDupPairs]]); a SUPPLIED standing index is a cheap narrow scan
+      // that must not be pinned (corpus-sized executor memory) — the caller
+      // owns its lifecycle.
+      val baseH = historyBuckets.getOrElse(s.checkpoint(bucketed(history, b)))
+      val baseD = s.checkpoint(bucketed(delta, b))
+      def ids(base: DataFrame) = base.select(col("vec_id"),
+        posexplode(col("buckets")).as(Seq("tbl", "bucket")))
+      val dh = ids(baseD).as("a").join(ids(baseH).as("b"),
+          col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
+            col("a.vec_id") =!= col("b.vec_id"))
+        .select(least(col("a.vec_id"), col("b.vec_id")).as("id_a"),
+          greatest(col("a.vec_id"), col("b.vec_id")).as("id_b"))
+      val dd = ids(baseD).as("a").join(ids(baseD).as("b"),
+          col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
+            col("a.vec_id") < col("b.vec_id"))
+        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
+      val cand = dh.union(dd).distinct()
+      // the verify joins look vectors up by id across BOTH batches
+      val all = baseH.unionByName(baseD)
+      val na = all.select(col("vec_id").as("id_a"), col("nv").as("nv_a"))
+      val nb = all.select(col("vec_id").as("id_b"), col("nv").as("nv_b"))
+      s.result(cand.join(na, "id_a").join(nb, "id_b")
+        .select(col("id_a"), col("id_b"),
+          round(VectorOps.dot(col("nv_a"), col("nv_b")), 6).as("score"))
+        .where(col("score") >= lit(threshold))
+        .orderBy("id_a", "id_b"))
     }
-    val baseD = bucketed(delta, b).localCheckpoint(true)
-    def ids(base: DataFrame) = base.select(col("vec_id"),
-      posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-    val dh = ids(baseD).as("a").join(ids(baseH).as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("id_a"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("id_b"))
-    val dd = ids(baseD).as("a").join(ids(baseD).as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-    val cand = dh.union(dd).distinct()
-    // the verify joins look vectors up by id across BOTH batches
-    val all = baseH.unionByName(baseD)
-    val na = all.select(col("vec_id").as("id_a"), col("nv").as("nv_a"))
-    val nb = all.select(col("vec_id").as("id_b"), col("nv").as("nv_b"))
-    val result = cand.join(na, "id_a").join(nb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(VectorOps.dot(col("nv_a"), col("nv_b")), 6).as("score"))
-      .where(col("score") >= lit(threshold))
-      .orderBy("id_a", "id_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count() // materialize the (tiny) result eagerly
-    graft.dedup.Dedup.releaseLocal(baseD)
-    if (ownedH) graft.dedup.Dedup.releaseLocal(baseH)
-    result
   }
 
   private def planeSql(p: Array[Double]): String =

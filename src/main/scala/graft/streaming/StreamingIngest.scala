@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
+import graft.Blocks
+import graft.dedup.Dedup
+
 /** Structured-Streaming analog of the reference's polling incremental
   * ingestion (SURVEY.md §2 Streaming / §7 item 6).
   *
@@ -171,25 +174,30 @@ object StreamingIngest {
       }
   }
 
+  /** The one `foreachBatch` wrapper every sink here uses: skips empty
+    * micro-batches and hands `body` the batch with its ingest tag — the
+    * batch id inside `tagPrefix` (reproducible, no driver-side now()). */
+  private def eachBatch(df: DataFrame, tagPrefix: String)(
+      body: (DataFrame, String) => Unit): DataStreamWriter[Row] =
+    df.writeStream.outputMode("append").foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) body(batch, f"$tagPrefix%s_b$batchId%05d")
+    }
+
   /** Write a stream into a managed table through the batch ingestion
     * path: each micro-batch runs [[graft.operators.Ingest.incrementalAppend]]
     * via `foreachBatch`, so the destination accumulates exactly like the
     * reference's polling loader — same tag column, same partitioning, same
     * watermark-filter semantics — but with the engine driving the batches.
-    * The batch id becomes part of the ingest tag (reproducible, no
-    * driver-side now()); the stream's own exactly-once bookkeeping comes
-    * from checkpointing + the append watermark. */
+    * The batch id becomes part of the ingest tag; the stream's own
+    * exactly-once bookkeeping comes from checkpointing + the append
+    * watermark. */
   def toIngestSink(
       df: DataFrame, db: String, table: String, incrementalColumn: String,
-      tagPrefix: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Ingest.incrementalAppend(
-            batch.sparkSession, batch, db, table, incrementalColumn,
-            tag = f"$tagPrefix%s_b$batchId%05d")
-          ()
-        }
+      tagPrefix: String): DataStreamWriter[Row] =
+    eachBatch(df, tagPrefix) { (batch, tag) =>
+      graft.operators.Ingest.incrementalAppend(
+        batch.sparkSession, batch, db, table, incrementalColumn, tag = tag)
     }
 
   /** Streaming near-dup admission: each micro-batch of documents is
@@ -225,14 +233,9 @@ object StreamingIngest {
       docs: DataFrame, db: String, table: String,
       threshold: Double = 0.8,
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          admitBatch(batch0, db, table, threshold,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
-          ()
-        }
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(docs, tagPrefix) { (batch, tag) =>
+      admitBatch(batch, db, table, threshold, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch of the near-dup admission pipeline (the foreachBatch
@@ -242,72 +245,87 @@ object StreamingIngest {
   private[graft] def admitBatch(
       batch0: DataFrame, db: String, table: String, threshold: Double,
       tag: String, tagColumn: String = "dl_ingest_date"): Unit = {
-    import graft.dedup.Dedup
     val spark = batch0.sparkSession
-    val batch = batch0.persist()
     val full = s"$db.$table"
     val sigsTable = s"${full}_minhash_sigs"
-    val sigCols = "doc_id" +: (0 until Dedup.NumHashes).map(i => s"m$i")
-    val haveHistory = spark.catalog.tableExists(full)
-    val pairs =
-      if (haveHistory)
-        Dedup.minHashLshPairsIncremental(
-          // a RETRIED tag must not see its own previous attempt as history
-          spark.table(full).where(col(tagColumn) =!= lit(tag))
-            .select(batch.columns.filter(_ != tagColumn).map(col): _*),
-          batch, threshold,
-          historySigs = Some(
-            spark.table(sigsTable).where(col(tagColumn) =!= lit(tag))
-              .select(sigCols.map(col): _*)))
-      else Dedup.minHashLshPairs(batch, threshold)
-    val drops = batchDrops(pairs, batch)
-    // localCheckpoint severs the plan's reference to the history table:
-    // the tag-partition overwrite below would otherwise be rejected as
-    // overwrite-of-a-read-table (same hazard the ingest scratch dance
-    // guards; the admitted set is batch-sized, so a local materialization
-    // is the cheaper cure here)
-    val admitted = batch
-      .join(broadcast(drops), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    // the pair builders return an internally persist+count'ed relation the
-    // caller owns; after the eager checkpoint nothing references it — a
-    // long-running stream would otherwise accrete one cached pair relation
-    // per micro-batch
-    pairs.unpersist(false)
-    if (!admitted.isEmpty) {
-      writeTagPartition(admitted.withColumn(tagColumn, lit(tag)),
-        full, tagColumn)
-      writeTagPartition(
-        Dedup.minHashSignatures(admitted).withColumn(tagColumn, lit(tag)),
-        sigsTable, tagColumn)
-    }
-    // the batch's own eager checkpoint is fully consumed by the writes:
-    // release its blocks NOW — a long-running stream must not accrete one
-    // checkpoint per micro-batch on ContextCleaner/GC timing
-    // (StreamingCacheHygieneSpec pins zero extras per batch)
-    graft.Blocks.releaseLocal(admitted)
-    batch.unpersist()
+    admitPairBatch(batch0, sigsTable, "doc_id", ("doc_a", "doc_b"))(
+      offer = (s, _) => s.persist(batch0),
+      pairs = (batch, history) =>
+        if (history)
+          Dedup.minHashLshPairsIncremental(
+            otherTags(spark, full, tagColumn, tag)
+              .select(batch.columns.filter(_ != tagColumn).map(col): _*),
+            batch, threshold,
+            historySigs = Some(
+              otherTags(spark, sigsTable, tagColumn, tag).select(SigCols.map(col): _*)))
+        else Dedup.minHashLshPairs(batch, threshold),
+      write = admitted => {
+        writeTagPartition(admitted, full, tagColumn, tag)
+        writeTagPartition(Dedup.minHashSignatures(admitted), sigsTable, tagColumn, tag)
+      })
   }
 
+  /** Signature-table columns of the MinHash admission indexes. */
+  private val SigCols = "doc_id" +: (0 until Dedup.NumHashes).map(i => s"m$i")
+
+  /** `table`'s rows of every tag but `tag`: a RETRIED tag must not see
+    * its own previous attempt as history. */
+  private def otherTags(
+      spark: SparkSession, table: String, tagColumn: String, tag: String): DataFrame =
+    spark.table(table).where(col(tagColumn) =!= lit(tag))
+
+  /** The batch lifecycle of the five pair-based admission sinks, in one
+    * [[graft.Blocks.scope]]: pin the `offer`ed rows, build their near-dup
+    * `pairs` (against the standing tables when there is history), apply
+    * the [[batchDrops]] policy, checkpoint the admitted set, `write` it
+    * only if it is non-empty, and release everything — also when a stage
+    * throws, so a failing batch leaves no pinned frame behind. The
+    * checkpoint severs the plan's read of the history tables before the
+    * tag-partition overwrite (overwrite-of-a-read-table hazard; the
+    * admitted set is batch-sized, so a local materialization is the
+    * cheaper cure). The builder's pair relation is released as soon as
+    * the admitted set is materialized: a long-running stream must not
+    * accrete one cached relation or checkpoint per micro-batch
+    * (StreamingCacheHygieneSpec pins zero extras per batch).
+    *
+    * History exists when `lastTable`, the LAST table `write` writes,
+    * does: a first batch that died between its writes leaves the earlier
+    * tables without the index, and its retry must take the cold path
+    * again instead of reading an index that was never written. */
+  private def admitPairBatch(
+      batch0: DataFrame, lastTable: String, id: String, pairCols: (String, String))(
+      offer: (Blocks.Scope, Boolean) => DataFrame,
+      pairs: (DataFrame, Boolean) => DataFrame,
+      write: DataFrame => Unit): Unit =
+    Blocks.scope { s =>
+      val history = batch0.sparkSession.catalog.tableExists(lastTable)
+      val offered = offer(s, history)
+      val admitted = Blocks.scope { p =>
+        val drops = batchDrops(p.adopt(pairs(offered, history)), offered, id, pairCols)
+        s.checkpoint(offered.join(broadcast(drops), Seq(id), "left_anti"))
+      }
+      if (!admitted.isEmpty) write(admitted)
+    }
+
   /** Shared rejection policy of the pair-based admission sinks: given
-    * the near-dup pairs of a micro-batch vs (history ∪ batch), the
-    * batch doc_ids to drop — both sides in batch keeps the smaller id;
-    * a batch-vs-history pair drops the batch side whichever slot it
-    * landed in. */
-  private def batchDrops(pairs: DataFrame, batch: DataFrame): DataFrame = {
-    val ids = batch.select(col("doc_id")).distinct()
-    val aIn = ids.select(col("doc_id").as("doc_a"))
-      .withColumn("a_in_batch", lit(true))
-    val bIn = ids.select(col("doc_id").as("doc_b"))
-      .withColumn("b_in_batch", lit(true))
+    * the near-dup pairs (`pairCols`, smaller id first) of a micro-batch
+    * vs (history ∪ batch), the batch `id`s to drop — both sides in batch
+    * keeps the smaller id; a batch-vs-history pair drops the batch side
+    * whichever slot it landed in. */
+  private def batchDrops(
+      pairs: DataFrame, batch: DataFrame, id: String,
+      pairCols: (String, String)): DataFrame = {
+    val (a, b) = pairCols
+    val ids = batch.select(col(id)).distinct()
+    val aIn = ids.select(col(id).as(a)).withColumn("a_in_batch", lit(true))
+    val bIn = ids.select(col(id).as(b)).withColumn("b_in_batch", lit(true))
     pairs
-      .join(aIn, Seq("doc_a"), "left")
-      .join(bIn, Seq("doc_b"), "left")
+      .join(aIn, Seq(a), "left")
+      .join(bIn, Seq(b), "left")
       .select(
-        when(col("a_in_batch").isNotNull && col("b_in_batch").isNotNull,
-          col("doc_b"))
-          .when(col("a_in_batch").isNotNull, col("doc_a"))
-          .otherwise(col("doc_b")).as("doc_id"))
+        when(col("a_in_batch").isNotNull && col("b_in_batch").isNotNull, col(b))
+          .when(col("a_in_batch").isNotNull, col(a))
+          .otherwise(col(b)).as(id))
       .distinct()
   }
 
@@ -323,14 +341,9 @@ object StreamingIngest {
       docs: DataFrame, db: String, table: String,
       threshold: Double = 0.6,
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          admitContainmentBatch(batch0, db, table, threshold,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
-          ()
-        }
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(docs, tagPrefix) { (batch, tag) =>
+      admitContainmentBatch(batch, db, table, threshold, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch of the containment admission pipeline (the
@@ -339,40 +352,24 @@ object StreamingIngest {
   private[graft] def admitContainmentBatch(
       batch0: DataFrame, db: String, table: String, threshold: Double,
       tag: String, tagColumn: String = "dl_ingest_date"): Unit = {
-    import graft.dedup.Dedup
     val spark = batch0.sparkSession
-    val batch = batch0.persist()
     val full = s"$db.$table"
     val sigsTable = s"${full}_wordminhash_sigs"
-    val sigCols = "doc_id" +: (0 until Dedup.NumHashes).map(i => s"m$i")
-    val haveHistory = spark.catalog.tableExists(full)
-    val pairs =
-      if (haveHistory)
-        Dedup.ngramContainmentPairsIncremental(
-          // a RETRIED tag must not see its own previous attempt as history
-          spark.table(full).where(col(tagColumn) =!= lit(tag))
-            .select(batch.columns.filter(_ != tagColumn).map(col): _*),
-          batch, threshold,
-          historySigs = Some(
-            spark.table(sigsTable).where(col(tagColumn) =!= lit(tag))
-              .select(sigCols.map(col): _*)))
-      else Dedup.ngramContainmentPairs(batch, threshold)
-    val drops = batchDrops(pairs, batch)
-    val admitted = batch
-      .join(broadcast(drops), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    // release the builder's internally-pinned pair relation (see admitBatch)
-    pairs.unpersist(false)
-    if (!admitted.isEmpty) {
-      writeTagPartition(admitted.withColumn(tagColumn, lit(tag)),
-        full, tagColumn)
-      writeTagPartition(
-        Dedup.wordMinHashSignatures(admitted).withColumn(tagColumn, lit(tag)),
-        sigsTable, tagColumn)
-    }
-    // deterministic per-batch checkpoint release (see admitBatch)
-    graft.Blocks.releaseLocal(admitted)
-    batch.unpersist()
+    admitPairBatch(batch0, sigsTable, "doc_id", ("doc_a", "doc_b"))(
+      offer = (s, _) => s.persist(batch0),
+      pairs = (batch, history) =>
+        if (history)
+          Dedup.ngramContainmentPairsIncremental(
+            otherTags(spark, full, tagColumn, tag)
+              .select(batch.columns.filter(_ != tagColumn).map(col): _*),
+            batch, threshold,
+            historySigs = Some(
+              otherTags(spark, sigsTable, tagColumn, tag).select(SigCols.map(col): _*)))
+        else Dedup.ngramContainmentPairs(batch, threshold),
+      write = admitted => {
+        writeTagPartition(admitted, full, tagColumn, tag)
+        writeTagPartition(Dedup.wordMinHashSignatures(admitted), sigsTable, tagColumn, tag)
+      })
   }
 
   /** Streaming exact-substring coverage at ingest: each micro-batch of
@@ -395,14 +392,9 @@ object StreamingIngest {
   def toSpanStatsSink(
       docs: DataFrame, db: String, table: String,
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          annotateSpanBatch(batch0, db, table,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
-          ()
-        }
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(docs, tagPrefix) { (batch, tag) =>
+      annotateSpanBatch(batch, db, table, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch of the span-annotation pipeline (the foreachBatch
@@ -410,17 +402,14 @@ object StreamingIngest {
     * Idempotent for a given `tag`. */
   private[graft] def annotateSpanBatch(
       batch0: DataFrame, db: String, table: String,
-      tag: String, tagColumn: String = "dl_ingest_date"): Unit = {
-    import graft.dedup.Dedup
+      tag: String, tagColumn: String = "dl_ingest_date"): Unit = Blocks.scope { s =>
     val spark = batch0.sparkSession
-    val batch = batch0.persist()
+    val batch = s.persist(batch0)
     val full = s"$db.$table"
     val gramsTable = s"${full}_span_grams"
     val stats =
       if (spark.catalog.tableExists(gramsTable)) {
-        // a RETRIED tag must not count its own previous attempt as history
-        val histCounts = spark.table(gramsTable)
-          .where(col(tagColumn) =!= lit(tag))
+        val histCounts = otherTags(spark, gramsTable, tagColumn, tag)
           .groupBy("gh").agg(sum(col("hc")).as("hc"))
         // history text is never touched when the count table is supplied —
         // the first argument is only a fallback source (passed but unused)
@@ -428,19 +417,11 @@ object StreamingIngest {
           history = batch, delta = batch,
           historyGramCounts = Some(histCounts))
       } else Dedup.duplicatedSpanStats(batch) // first batch: corpus = batch
-    // localCheckpoint severs the plan's read of the gram table before the
+    // the checkpoint severs the plan's read of the gram table before the
     // tag-partition overwrite below (overwrite-of-a-read-table hazard)
-    val annotated = batch
-      .join(stats.drop("n_tokens"), Seq("doc_id"))
-      .localCheckpoint(true)
-    writeTagPartition(annotated.withColumn(tagColumn, lit(tag)),
-      full, tagColumn)
-    writeTagPartition(
-      Dedup.spanGramCounts(batch).withColumn(tagColumn, lit(tag)),
-      gramsTable, tagColumn)
-    // deterministic per-batch checkpoint release (see admitBatch)
-    graft.Blocks.releaseLocal(annotated)
-    batch.unpersist()
+    val annotated = s.checkpoint(batch.join(stats.drop("n_tokens"), Seq("doc_id")))
+    writeTagPartition(annotated, full, tagColumn, tag)
+    writeTagPartition(Dedup.spanGramCounts(batch), gramsTable, tagColumn, tag)
   }
 
   /** Streaming SEMANTIC near-dup admission: the embedding-space twin of
@@ -459,14 +440,9 @@ object StreamingIngest {
       threshold: Double = 0.45,
       bits: Int = graft.sim.CosineLsh.BitsPerTable,
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.outputMode("append").foreachBatch {
-      (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          admitEmbeddingBatch(batch0, db, table, threshold, bits,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
-          ()
-        }
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(vecs, tagPrefix) { (batch, tag) =>
+      admitEmbeddingBatch(batch, db, table, threshold, bits, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch of the embedding admission pipeline (the foreachBatch
@@ -477,54 +453,23 @@ object StreamingIngest {
       bits: Int, tag: String, tagColumn: String = "dl_ingest_date"): Unit = {
     import graft.sim.CosineLsh
     val spark = batch0.sparkSession
-    val batch = batch0.persist()
     val full = s"$db.$table"
     val idxTable = s"${full}_emb_buckets"
-    val haveHistory = spark.catalog.tableExists(full)
-    val pairs =
-      if (haveHistory)
-        CosineLsh.nearDupPairsIncremental(
-          // a RETRIED tag must not see its own previous attempt as history
-          spark.table(full).where(col(tagColumn) =!= lit(tag))
-            .select(batch.columns.filter(_ != tagColumn).map(col): _*),
-          batch, threshold, Some(bits),
-          historyBuckets = Some(
-            spark.table(idxTable).where(col(tagColumn) =!= lit(tag))
-              .select("vec_id", "nv", "buckets")))
-      else CosineLsh.nearDupPairs(batch, threshold, Some(bits))
-    val ids = batch.select(col("vec_id")).distinct()
-    val aIn = ids.select(col("vec_id").as("id_a"))
-      .withColumn("a_in_batch", lit(true))
-    val bIn = ids.select(col("vec_id").as("id_b"))
-      .withColumn("b_in_batch", lit(true))
-    // pairs come id_a < id_b: both in batch -> keep the smaller id;
-    // otherwise drop the batch-side slot
-    val drops = pairs
-      .join(aIn, Seq("id_a"), "left")
-      .join(bIn, Seq("id_b"), "left")
-      .select(
-        when(col("a_in_batch").isNotNull && col("b_in_batch").isNotNull,
-          col("id_b"))
-          .when(col("a_in_batch").isNotNull, col("id_a"))
-          .otherwise(col("id_b")).as("vec_id"))
-      .distinct()
-    // sever the plan's reference to the history table before the
-    // tag-partition overwrite (same hazard as admitBatch)
-    val admitted = batch
-      .join(broadcast(drops), Seq("vec_id"), "left_anti")
-      .localCheckpoint(true)
-    // release the builder's internally-pinned pair relation (see admitBatch)
-    pairs.unpersist(false)
-    if (!admitted.isEmpty) {
-      writeTagPartition(admitted.withColumn(tagColumn, lit(tag)),
-        full, tagColumn)
-      writeTagPartition(
-        CosineLsh.bucketed(admitted, bits).withColumn(tagColumn, lit(tag)),
-        idxTable, tagColumn)
-    }
-    // deterministic per-batch checkpoint release (see admitBatch)
-    graft.Blocks.releaseLocal(admitted)
-    batch.unpersist()
+    admitPairBatch(batch0, idxTable, "vec_id", ("id_a", "id_b"))(
+      offer = (s, _) => s.persist(batch0),
+      pairs = (batch, history) =>
+        if (history)
+          CosineLsh.nearDupPairsIncremental(
+            otherTags(spark, full, tagColumn, tag)
+              .select(batch.columns.filter(_ != tagColumn).map(col): _*),
+            batch, threshold, Some(bits),
+            historyBuckets = Some(
+              otherTags(spark, idxTable, tagColumn, tag).select("vec_id", "nv", "buckets")))
+        else CosineLsh.nearDupPairs(batch, threshold, Some(bits)),
+      write = admitted => {
+        writeTagPartition(admitted, full, tagColumn, tag)
+        writeTagPartition(CosineLsh.bucketed(admitted, bits), idxTable, tagColumn, tag)
+      })
   }
 
   /** Streaming perceptual-hash admission over a media stream: each
@@ -541,14 +486,9 @@ object StreamingIngest {
       media: DataFrame, db: String, table: String,
       maxHamming: Int = 2,
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    media.writeStream.outputMode("append").foreachBatch {
-      (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          admitPhashBatch(batch0, db, table, maxHamming,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
-          ()
-        }
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(media, tagPrefix) { (batch, tag) =>
+      admitPhashBatch(batch, db, table, maxHamming, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch of the pHash admission pipeline (the foreachBatch
@@ -559,60 +499,25 @@ object StreamingIngest {
       tag: String, tagColumn: String = "dl_ingest_date"): Unit = {
     import graft.mm.Multimodal
     val spark = batch0.sparkSession
-    val batch = batch0.persist()
     val full = s"$db.$table"
     val idxTable = s"${full}_phash"
-    val haveHistory = spark.catalog.tableExists(full)
-    val pairs =
-      if (haveHistory)
-        Multimodal.phashNearDupPairsIncremental(
-          spark,
-          // history media is never decoded: the standing hash table below
-          // short-circuits the kernel; a RETRIED tag must not see its own
-          // previous attempt as history
-          history = batch.limit(0),
-          delta = batch, maxHamming = maxHamming,
-          historyHashes = Some(
-            spark.table(idxTable).where(col(tagColumn) =!= lit(tag))
-              .select("media_id", "phash")))
-      else Multimodal.phashNearDupPairs(spark, batch, maxHamming)
-    val ids = batch.select(col("media_id")).distinct()
-    val aIn = ids.select(col("media_id").as("media_a"))
-      .withColumn("a_in_batch", lit(true))
-    val bIn = ids.select(col("media_id").as("media_b"))
-      .withColumn("b_in_batch", lit(true))
-    // pairs come media_a < media_b: both in batch -> keep the smaller id;
-    // otherwise drop the batch-side slot
-    val drops = pairs
-      .join(aIn, Seq("media_a"), "left")
-      .join(bIn, Seq("media_b"), "left")
-      .select(
-        when(col("a_in_batch").isNotNull && col("b_in_batch").isNotNull,
-          col("media_b"))
-          .when(col("a_in_batch").isNotNull, col("media_a"))
-          .otherwise(col("media_b")).as("media_id"))
-      .distinct()
-    // sever the plan's reference to the history table before the
-    // tag-partition overwrite (same hazard as admitBatch)
-    val admitted = batch
-      .join(broadcast(drops), Seq("media_id"), "left_anti")
-      .localCheckpoint(true)
-    // the pair builders return a PINNED result (materialize-and-release
-    // of their internal caches); the eager checkpoint above consumed it,
-    // so release it here — per-batch sinks must not accrete one cached
-    // pair relation per micro-batch (r11 advice)
-    pairs.unpersist(false)
-    if (!admitted.isEmpty) {
-      writeTagPartition(admitted.withColumn(tagColumn, lit(tag)),
-        full, tagColumn)
-      writeTagPartition(
-        Multimodal.perceptualHashes(spark, admitted)
-          .withColumn(tagColumn, lit(tag)),
-        idxTable, tagColumn)
-    }
-    // deterministic per-batch checkpoint release (see admitBatch)
-    graft.Blocks.releaseLocal(admitted)
-    batch.unpersist()
+    admitPairBatch(batch0, idxTable, "media_id", ("media_a", "media_b"))(
+      offer = (s, _) => s.persist(batch0),
+      pairs = (batch, history) =>
+        if (history)
+          Multimodal.phashNearDupPairsIncremental(
+            spark,
+            // history media is never decoded: the standing hash table below
+            // short-circuits the kernel
+            history = batch.limit(0),
+            delta = batch, maxHamming = maxHamming,
+            historyHashes = Some(
+              otherTags(spark, idxTable, tagColumn, tag).select("media_id", "phash")))
+        else Multimodal.phashNearDupPairs(spark, batch, maxHamming),
+      write = admitted => {
+        writeTagPartition(admitted, full, tagColumn, tag)
+        writeTagPartition(Multimodal.perceptualHashes(spark, admitted), idxTable, tagColumn, tag)
+      })
   }
 
   /** The full curation funnel AT INGEST: each micro-batch of documents
@@ -629,14 +534,9 @@ object StreamingIngest {
       docs: DataFrame, db: String, table: String,
       minQuality: Double, threshold: Double = 0.8,
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          admitCurationBatch(batch0, db, table, minQuality, threshold,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
-          ()
-        }
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(docs, tagPrefix) { (batch, tag) =>
+      admitCurationBatch(batch, db, table, minQuality, threshold, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch of the curation funnel (the foreachBatch body of
@@ -646,87 +546,58 @@ object StreamingIngest {
       batch0: DataFrame, db: String, table: String,
       minQuality: Double, threshold: Double,
       tag: String, tagColumn: String = "dl_ingest_date"): Unit = {
-    import graft.dedup.Dedup
     import graft.text.TextAnalysis
     val spark = batch0.sparkSession
     val full = s"$db.$table"
     val fpsTable = s"${full}_fps"
     val sigsTable = s"${full}_minhash_sigs"
-    val sigCols = "doc_id" +: (0 until Dedup.NumHashes).map(i => s"m$i")
-    val haveHistory = spark.catalog.tableExists(full)
-
-    // Stage 1: quality gate (fixed threshold, scan-side score).
-    val q = batch0
-      .where(TextAnalysis.qualityScore(col("text")) >= lit(minQuality))
-      .persist()
-
-    // Stage 2: exact dedup — in-batch keep-smallest per fingerprint, then
-    // drop fingerprints the admitted history already holds (one narrow
-    // join against the standing (doc_id, fp) table; text never re-read).
-    val withFp = q.withColumn("__fp", TextAnalysis.fingerprint(col("text")))
-    val inBatchKeep = withFp.groupBy(col("__fp"))
-      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    val batchUnique = withFp.join(inBatchKeep, Seq("doc_id"), "left_semi")
-    val e = (if (haveHistory)
-        batchUnique.join(
-          spark.table(fpsTable).where(col(tagColumn) =!= lit(tag))
-            .select(col("fp").as("__fp")),
-          Seq("__fp"), "left_anti")
-      else batchUnique).persist()
-
-    // Stage 3: MinHash near-dedup against the standing signatures (the
-    // incremental pipeline; history text is never re-shingled).
-    val pairs =
-      if (haveHistory)
-        Dedup.minHashLshPairsIncremental(
-          spark.table(full).where(col(tagColumn) =!= lit(tag))
-            .select(batch0.columns.filter(_ != tagColumn).map(col): _*),
-          e.drop("__fp"), threshold,
-          historySigs = Some(
-            spark.table(sigsTable).where(col(tagColumn) =!= lit(tag))
-              .select(sigCols.map(col): _*)))
-      else Dedup.minHashLshPairs(e.drop("__fp"), threshold)
-    val ids = e.select(col("doc_id")).distinct()
-    val aIn = ids.select(col("doc_id").as("doc_a"))
-      .withColumn("a_in_batch", lit(true))
-    val bIn = ids.select(col("doc_id").as("doc_b"))
-      .withColumn("b_in_batch", lit(true))
-    val drops = pairs
-      .join(aIn, Seq("doc_a"), "left")
-      .join(bIn, Seq("doc_b"), "left")
-      .select(
-        when(col("a_in_batch").isNotNull && col("b_in_batch").isNotNull,
-          col("doc_b"))
-          .when(col("a_in_batch").isNotNull, col("doc_a"))
-          .otherwise(col("doc_b")).as("doc_id"))
-      .distinct()
-    val admitted = e
-      .join(broadcast(drops), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    // release the builder's internally-pinned pair relation (see admitBatch)
-    pairs.unpersist(false)
-    if (!admitted.isEmpty) {
-      writeTagPartition(
-        admitted.drop("__fp").withColumn(tagColumn, lit(tag)), full, tagColumn)
-      writeTagPartition(
-        admitted.select(col("doc_id"), col("__fp").as("fp"))
-          .withColumn(tagColumn, lit(tag)),
-        fpsTable, tagColumn)
-      writeTagPartition(
-        Dedup.minHashSignatures(admitted.drop("__fp"))
-          .withColumn(tagColumn, lit(tag)),
-        sigsTable, tagColumn)
-    }
-    // deterministic per-batch checkpoint release (see admitBatch)
-    graft.Blocks.releaseLocal(admitted)
-    q.unpersist(); e.unpersist()
+    admitPairBatch(batch0, sigsTable, "doc_id", ("doc_a", "doc_b"))(
+      offer = (s, history) => {
+        // Stage 1: quality gate (fixed threshold, scan-side score).
+        val q = s.persist(
+          batch0.where(TextAnalysis.qualityScore(col("text")) >= lit(minQuality)))
+        // Stage 2: exact dedup — in-batch keep-smallest per fingerprint,
+        // then drop fingerprints the admitted history already holds (one
+        // narrow join against the standing (doc_id, fp) table; text never
+        // re-read).
+        val withFp = q.withColumn("__fp", TextAnalysis.fingerprint(col("text")))
+        val inBatchKeep = withFp.groupBy(col("__fp"))
+          .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
+        val batchUnique = withFp.join(inBatchKeep, Seq("doc_id"), "left_semi")
+        s.persist(
+          if (history)
+            batchUnique.join(
+              otherTags(spark, fpsTable, tagColumn, tag).select(col("fp").as("__fp")),
+              Seq("__fp"), "left_anti")
+          else batchUnique)
+      },
+      // Stage 3: MinHash near-dedup against the standing signatures (the
+      // incremental pipeline; history text is never re-shingled).
+      pairs = (e, history) =>
+        if (history)
+          Dedup.minHashLshPairsIncremental(
+            otherTags(spark, full, tagColumn, tag)
+              .select(batch0.columns.filter(_ != tagColumn).map(col): _*),
+            e.drop("__fp"), threshold,
+            historySigs = Some(
+              otherTags(spark, sigsTable, tagColumn, tag).select(SigCols.map(col): _*)))
+        else Dedup.minHashLshPairs(e.drop("__fp"), threshold),
+      write = admitted => {
+        writeTagPartition(admitted.drop("__fp"), full, tagColumn, tag)
+        writeTagPartition(admitted.select(col("doc_id"), col("__fp").as("fp")),
+          fpsTable, tagColumn, tag)
+        writeTagPartition(Dedup.minHashSignatures(admitted.drop("__fp")),
+          sigsTable, tagColumn, tag)
+      })
   }
 
-  /** First write creates the tag-partitioned table; later writes replace
-    * exactly the tags present in `df` (dynamic partition overwrite) — the
-    * idempotence mechanism for at-least-once micro-batch delivery. */
+  /** Tags `df` with `tag` and writes it: the first write creates the
+    * tag-partitioned table; later writes replace exactly the tags present
+    * in `df` (dynamic partition overwrite) — the idempotence mechanism for
+    * at-least-once micro-batch delivery. */
   private def writeTagPartition(
-      df: DataFrame, table: String, tagColumn: String): Unit = {
+      df0: DataFrame, table: String, tagColumn: String, tag: String): Unit = {
+    val df = df0.withColumn(tagColumn, lit(tag))
     val spark = df.sparkSession
     if (!spark.catalog.tableExists(table))
       df.write.partitionBy(tagColumn).format("parquet").saveAsTable(table)
@@ -765,10 +636,9 @@ object StreamingIngest {
   def toSketchSink(
       events: DataFrame, db: String, table: String,
       groupCol: String = "event_type", keyCol: String = "user_id",
-      k: Int = 64): DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) foldSketchBatch(batch, db, table, groupCol, keyCol, k)
+      k: Int = 64): DataStreamWriter[Row] =
+    eachBatch(events, tagPrefix = "") { (batch, _) =>
+      foldSketchBatch(batch, db, table, groupCol, keyCol, k)
     }
 
   /** One micro-batch fold: standing sketch ∪ batch bottom-k, re-cut to k
@@ -843,10 +713,9 @@ object StreamingIngest {
     * tag-partitioned counts. */
   def toHllSink(
       events: DataFrame, db: String, table: String,
-      groupCol: String = "event_type", keyCol: String = "user_id"): DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) foldHllBatch(batch, db, table, groupCol, keyCol)
+      groupCol: String = "event_type", keyCol: String = "user_id"): DataStreamWriter[Row] =
+    eachBatch(events, tagPrefix = "") { (batch, _) =>
+      foldHllBatch(batch, db, table, groupCol, keyCol)
     }
 
   /** One micro-batch fold: standing registers ∪ batch registers, max per
@@ -925,14 +794,9 @@ object StreamingIngest {
   def toNoveltySink(
       docs: DataFrame, db: String, table: String,
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          scoreNoveltyBatch(batch, db, table,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
-          ()
-        }
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(docs, tagPrefix) { (batch, tag) =>
+      scoreNoveltyBatch(batch, db, table, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch of the novelty pipeline (the foreachBatch body of
@@ -940,41 +804,34 @@ object StreamingIngest {
     * for a given tag. */
   private[graft] def scoreNoveltyBatch(
       batch0: DataFrame, db: String, table: String,
-      tag: String, tagColumn: String = "dl_ingest_date"): Unit = {
+      tag: String, tagColumn: String = "dl_ingest_date"): Unit = Blocks.scope { s =>
     import graft.text.Novelty
     val spark = batch0.sparkSession
-    val batch = batch0.persist()
+    val batch = s.persist(batch0)
     val full = s"$db.$table"
     val gramsTable = s"${full}_novelty_grams"
     val scored =
       if (spark.catalog.tableExists(gramsTable)) {
-        // a RETRIED tag must not count its own previous attempt as history.
         // Semi-join the standing table down to THIS batch's shingles
         // BEFORE the min-merge: without it the groupBy re-shuffles every
         // standing gram ever ingested each micro-batch; with it only rows
         // the batch can actually match reach the merge (and AQE broadcasts
         // the batch-gram side when it is small).
-        val batchShingles = graft.dedup.Dedup
+        val batchShingles = Dedup
           .wordShingles(batch, n = Novelty.GramSize, dedup = true)
           .select("shingle").distinct()
-        val standing = spark.table(gramsTable)
-          .where(col(tagColumn) =!= lit(tag))
+        val standing = otherTags(spark, gramsTable, tagColumn, tag)
           .join(batchShingles, Seq("shingle"), "left_semi")
           .groupBy("shingle").agg(min(col("first_doc")).as("hist_first"))
         Novelty.scoreIncremental(batch, standing)
       } else Novelty.score(batch) // first batch: corpus = batch
-    // localCheckpoint severs the plan's read of the gram table before the
+    // the checkpoint severs the plan's read of the gram table before the
     // tag-partition overwrite below (overwrite-of-a-read-table hazard)
-    val annotated = batch.join(scored, Seq("doc_id")).localCheckpoint(true)
-    writeTagPartition(annotated.withColumn(tagColumn, lit(tag)), full, tagColumn)
+    val annotated = s.checkpoint(batch.join(scored, Seq("doc_id")))
+    writeTagPartition(annotated, full, tagColumn, tag)
     writeTagPartition(
-      Novelty.firstSeen(batch)
-        .select(col("shingle"), col("hist_first").as("first_doc"))
-        .withColumn(tagColumn, lit(tag)),
-      gramsTable, tagColumn)
-    // deterministic per-batch checkpoint release (see admitBatch)
-    graft.Blocks.releaseLocal(annotated)
-    batch.unpersist()
+      Novelty.firstSeen(batch).select(col("shingle"), col("hist_first").as("first_doc")),
+      gramsTable, tagColumn, tag)
   }
 
   /** Streaming Count-Min sketch maintenance — the frequency twin of
@@ -993,12 +850,9 @@ object StreamingIngest {
       events: DataFrame, db: String, table: String,
       keyCol: String = "user_id",
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          foldCmsBatch(batch, db, table, keyCol,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(events, tagPrefix) { (batch, tag) =>
+      foldCmsBatch(batch, db, table, keyCol, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch CMS fold (the foreachBatch body of [[toCmsSink]],
@@ -1014,8 +868,7 @@ object StreamingIngest {
         .as("rb"))
       .groupBy(col("rb.row").as("row"), col("rb.bucket").as("bucket"))
       .agg(count(lit(1)).as("c"))
-      .withColumn(tagColumn, lit(tag))
-    writeTagPartition(grid, s"$db.${table}_cms", tagColumn)
+    writeTagPartition(grid, s"$db.${table}_cms", tagColumn, tag)
   }
 
   /** Per-key frequency estimates off the standing CMS table: counters
@@ -1055,12 +908,9 @@ object StreamingIngest {
   def toNbCountsSink(
       docs: DataFrame, db: String, table: String,
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          foldNbBatch(batch, db, table,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(docs, tagPrefix) { (batch, tag) =>
+      foldNbBatch(batch, db, table, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch NB counter fold (the foreachBatch body of
@@ -1069,9 +919,8 @@ object StreamingIngest {
   private[graft] def foldNbBatch(
       batch: DataFrame, db: String, table: String,
       tag: String, tagColumn: String = "dl_ingest_date"): Unit =
-    writeTagPartition(
-      graft.text.NaiveBayes.countsFromDocs(batch).withColumn(tagColumn, lit(tag)),
-      s"$db.${table}_nb", tagColumn)
+    writeTagPartition(graft.text.NaiveBayes.countsFromDocs(batch),
+      s"$db.${table}_nb", tagColumn, tag)
 
   /** The continuously-trained model off the standing counter table:
     * counts sum across batch tags (additive merge), then the shared
@@ -1097,12 +946,9 @@ object StreamingIngest {
   def toAbTestSink(
       events: DataFrame, db: String, table: String,
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          foldAbBatch(batch, db, table,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(events, tagPrefix) { (batch, tag) =>
+      foldAbBatch(batch, db, table, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch A/B counter fold (the foreachBatch body of
@@ -1117,8 +963,7 @@ object StreamingIngest {
       .select(col("user_id"),
         graft.operators.Experiment.cohort(col("user_id")).as("grp"),
         col("np"))
-      .withColumn(tagColumn, lit(tag))
-    writeTagPartition(per, s"$db.${table}_ab_users", tagColumn)
+    writeTagPartition(per, s"$db.${table}_ab_users", tagColumn, tag)
   }
 
   /** Experiment readout off the standing counters: per-user totals across
@@ -1156,12 +1001,9 @@ object StreamingIngest {
   def toSprtSink(
       events: DataFrame, db: String, table: String,
       tagPrefix: String = "stream",
-      tagColumn: String = "dl_ingest_date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          foldSprtBatch(batch, db, table,
-            tag = f"$tagPrefix%s_b$batchId%05d", tagColumn = tagColumn)
+      tagColumn: String = "dl_ingest_date"): DataStreamWriter[Row] =
+    eachBatch(events, tagPrefix) { (batch, tag) =>
+      foldSprtBatch(batch, db, table, tag = tag, tagColumn = tagColumn)
     }
 
   /** One micro-batch trial-ledger fold (the foreachBatch body of
@@ -1176,8 +1018,7 @@ object StreamingIngest {
       .groupBy("day", "user_id")
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
         .as("sc"))
-      .withColumn(tagColumn, lit(tag))
-    writeTagPartition(per, s"$db.${table}_sprt_trials", tagColumn)
+    writeTagPartition(per, s"$db.${table}_sprt_trials", tagColumn, tag)
   }
 
   /** The sequential decision curve off the standing ledger: per-(day,
@@ -1190,6 +1031,6 @@ object StreamingIngest {
         .groupBy("day", "user_id").agg(max(col("sc")).as("sc")))
 
   /** Memory-sink writer used by tests to drive a stream synchronously. */
-  def toMemorySink(df: DataFrame, name: String, outputMode: String): DataStreamWriter[org.apache.spark.sql.Row] =
+  def toMemorySink(df: DataFrame, name: String, outputMode: String): DataStreamWriter[Row] =
     df.writeStream.format("memory").queryName(name).outputMode(outputMode)
 }

@@ -728,7 +728,7 @@ object ScaleSmoke {
     // both pipelines materialize + persist their result internally, and a
     // repeated identical plan canonicalizes to a CACHE HIT — without a
     // clear between runs the A/B times measure leaked-cache luck, not
-    // work (ProfileIncr shows the honest cold times: incr beats full)
+    // work (cleared cold runs are the honest times: incr beats full)
     val tFull = med3 { spark.catalog.clearCache(); fullRun().count(); () }
     val tIncr = med3 { spark.catalog.clearCache(); incrRun().count(); () }
     println(f"[scale] containment_incr ${copies}x hist: full=${tFull}%.2f s incr=${tIncr}%.2f s")

@@ -109,10 +109,18 @@ class DedupSpec extends AnyFunSuite {
 
   test("non-convergence within maxRounds raises instead of returning junk") {
     val pairs = (1L until 20L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    spark.catalog.clearCache()
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
     assertThrows[IllegalStateException] {
       Dedup.connectedComponents(pairs, maxRounds = 2, localThreshold = 0)
         .collect()
     }
+    // the throw must not strand the persisted edge relation or any round's
+    // label checkpoint
+    assert(org.apache.spark.sql.CacheStateProbe.cacheIsEmpty(spark),
+      "connectedComponents left its edge relation cached after the throw")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- baseline).isEmpty,
+      "connectedComponents left label checkpoints behind after the throw")
   }
 
   test("duplicated-span stats: cross-doc, within-doc, clean, and short docs") {
@@ -179,15 +187,23 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("pair builders release their checkpointed intermediates deterministically") {
-    // r14: the pair pipelines localCheckpoint their multi-consumer
-    // intermediates (plan truncation — see Dedup.ngramJaccardPairs) and
-    // must release those blocks via Dedup.releaseLocal once the result is
-    // materialized, NOT wait for the ContextCleaner: a long-running
-    // driver (the streaming admission sinks) would otherwise accrete
-    // blocks per batch. After a builder returns, the only persistent RDDs
-    // beyond the baseline are the result's own cache blocks (<= 1 entry).
+    // r14: the pair pipelines localCheckpoint (or persist) their
+    // multi-consumer intermediates (plan truncation — see
+    // Dedup.ngramJaccardPairs) and must release them through their
+    // Blocks.scope once the result is materialized, NOT wait for the
+    // ContextCleaner: a long-running driver (the streaming admission sinks)
+    // would otherwise accrete blocks per batch. After a builder returns,
+    // the only persistent RDDs beyond the baseline are the result's own
+    // cache blocks (<= 1 entry).
     import org.apache.spark.sql.functions.col
+    import graft.mm.Multimodal
+    import graft.sim.CosineLsh
     val docs = spark.read.parquet(TestSpark.sf("sf0.01") + "/documents.parquet")
+    val even = docs.where(col("doc_id") % 2 === 0)
+    val odd = docs.where(col("doc_id") % 2 === 1)
+    val emb = spark.read.parquet(TestSpark.sf("sf0.001") + "/embeddings.parquet")
+    val media = Multimodal.mediaTable(
+      spark.read.parquet(TestSpark.sf("sf0.001") + "/documents.parquet"))
     spark.catalog.clearCache()
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
     val builders = Seq[(String, () => org.apache.spark.sql.DataFrame)](
@@ -196,7 +212,23 @@ class DedupSpec extends AnyFunSuite {
       ("winnowPairs", () => Dedup.winnowPairs(docs)),
       ("simHashPairs", () => Dedup.simHashPairs(docs)),
       ("minHashLshPairsIncremental", () => Dedup.minHashLshPairsIncremental(
-        docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1), 0.8)))
+        even, odd, 0.8)),
+      ("ngramContainmentPairs", () => Dedup.ngramContainmentPairs(docs)),
+      ("ngramContainmentPairsIncremental", () =>
+        Dedup.ngramContainmentPairsIncremental(even, odd)),
+      ("simHashPairsIncremental", () => Dedup.simHashPairsIncremental(even, odd)),
+      ("winnowPairsIncremental", () =>
+        Dedup.winnowPairsIncremental(docs, _ % 2 === 1)),
+      ("CosineLsh.nearDupPairs", () => CosineLsh.nearDupPairs(emb, 0.45, Some(6))),
+      ("CosineLsh.nearDupPairsIncremental", () => CosineLsh.nearDupPairsIncremental(
+        emb.where(col("vec_id") % 2 === 0), emb.where(col("vec_id") % 2 === 1),
+        0.45, Some(6))),
+      ("Multimodal.phashNearDupPairs", () =>
+        Multimodal.phashNearDupPairs(spark, media, maxHamming = 2)),
+      ("Multimodal.phashNearDupPairsIncremental", () =>
+        Multimodal.phashNearDupPairsIncremental(spark,
+          media.where(col("media_id") % 2 === 0), media.where(col("media_id") % 2 === 1),
+          maxHamming = 2)))
     builders.foreach { case (name, build) =>
       val result = build()
       val extra = spark.sparkContext.getPersistentRDDs.keySet -- baseline

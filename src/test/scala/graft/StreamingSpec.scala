@@ -330,6 +330,33 @@ class StreamingSpec extends AnyFunSuite {
     spark.sql("DROP DATABASE neardup_retry CASCADE")
   }
 
+  test("a first batch retried after dying between its writes admits like a clean run") {
+    import spark.implicits._
+    // docs 1/2 are exact copies (2 is dropped in-batch); 3 is distinct
+    val b1 = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota", "en"),
+      (2L, "alpha beta gamma delta epsilon zeta eta theta iota", "en"),
+      (3L, "some second body of text entirely unlike the first one", "en"))
+      .toDF("doc_id", "text", "lang")
+    def admitted(db: String): Seq[Long] = {
+      spark.catalog.refreshTable(s"$db.docs")
+      spark.table(s"$db.docs").select("doc_id").as[Long].collect().sorted.toSeq
+    }
+    Seq("torn_clean", "torn_retry").foreach { db =>
+      spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+      spark.sql(s"CREATE DATABASE $db")
+      StreamingIngest.admitBatch(b1, db, "docs", 0.8, tag = "t_b00000")
+    }
+    // batch 0 died after its main write: the index table never appeared
+    spark.sql("DROP TABLE torn_retry.docs_minhash_sigs")
+    // the retry of the same tag must take the cold path again
+    StreamingIngest.admitBatch(b1, "torn_retry", "docs", 0.8, tag = "t_b00000")
+    assert(admitted("torn_clean") == Seq(1L, 3L))
+    assert(admitted("torn_retry") == admitted("torn_clean"))
+    assert(spark.table("torn_retry.docs_minhash_sigs").count() == 2)
+    Seq("torn_clean", "torn_retry").foreach(db => spark.sql(s"DROP DATABASE $db CASCADE"))
+  }
+
   test("span-stats sink annotates batches against the standing gram index") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-stream-span").toString
