@@ -17,13 +17,15 @@ import org.apache.spark.storage.StorageLevel
   * materialized (StreamingCacheHygieneSpec / DedupSpec / GraphSpec pin
   * non-accretion).
   *
-  * SCOPE. [[scope]] owns that lifecycle for straight-line code: every
-  * frame pinned through its [[Scope]] — by eager `localCheckpoint`
-  * ([[Scope.checkpoint]]), by `persist` ([[Scope.persist]]), or adopted
-  * already cached ([[Scope.adopt]], e.g. a pair builder's returned
-  * relation) — is released when the block exits, whether it returns or
-  * throws. Iterative loops that retire one round's checkpoint per round
-  * call [[releaseLocal]] directly.
+  * SCOPE. [[scope]] owns that lifecycle: every frame pinned through its
+  * [[Scope]] — by eager `localCheckpoint` ([[Scope.checkpoint]]), by
+  * `persist` ([[Scope.persist]]), or adopted already materialized
+  * ([[Scope.adopt]], e.g. a pair builder's returned relation or a graph
+  * builder's returned checkpoint) — is released when the block exits,
+  * whether it returns or throws. Iterative loops pin each round's frame
+  * through the scope too and retire the superseded one with
+  * [[Scope.release]] as soon as its successor is materialized, so at most
+  * two rounds are live and a throw mid-loop leaks nothing.
   *
   * ONE-SHOT RESULT CONTRACT. A released checkpoint cannot be recomputed;
   * that is safe exactly when every consumer has already materialized its
@@ -34,28 +36,62 @@ import org.apache.spark.storage.StorageLevel
   * every such frame a public builder returns is one-shot: consume it from
   * the cache and `unpersist` it when done; do not unpersist-and-recompute
   * it, and treat cache-block loss like executor loss (re-run the builder).
+  *
+  * RETURNED-CHECKPOINT CONTRACT. An iterative builder whose final round is
+  * already an eager checkpoint (pageRank, labelPropagation*,
+  * kCoreFixpoint, connectedComponents) returns that checkpoint itself,
+  * handed out of the scope with [[Scope.keep]] — no extra persist+count
+  * job. The caller owns it: release it with [[releaseLocal]] (or
+  * [[Scope.adopt]] it) once consumed; left alone, the ContextCleaner
+  * retires it when the frame is GC'd. Block loss has the same
+  * consequence as under the one-shot contract.
   */
 object Blocks {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** The frames one [[scope]] block owns; see the object doc. */
   final class Scope private[Blocks] () {
-    private var releases = List.empty[() => Unit]
+    private var pins = List.empty[(DataFrame, () => Unit)]
+
+    private def pin(df: DataFrame, free: () => Unit): DataFrame = {
+      pins ::= (df -> free)
+      df
+    }
 
     /** Eager `localCheckpoint` of `df`; its blocks are released at exit. */
     def checkpoint(df: DataFrame): DataFrame = {
       val c = df.localCheckpoint(true)
-      releases ::= (() => releaseLocal(c))
-      c
+      pin(c, () => releaseLocal(c))
     }
 
     /** `persist` of `df` at the default cache level (lazy, as persist is);
       * unpersisted at exit. */
-    def persist(df: DataFrame): DataFrame = adopt(df.persist())
+    def persist(df: DataFrame): DataFrame = {
+      val p = df.persist()
+      pin(p, () => p.unpersist(false))
+    }
 
-    /** Take ownership of an already-cached frame; unpersisted at exit. */
-    def adopt(df: DataFrame): DataFrame = {
-      releases ::= (() => df.unpersist(false))
+    /** Take ownership of an already-materialized frame: a cached one is
+      * unpersisted at exit, a returned checkpoint has its blocks released. */
+    def adopt(df: DataFrame): DataFrame =
+      pin(df,
+        if (df.storageLevel != StorageLevel.NONE) () => df.unpersist(false)
+        else () => releaseLocal(df))
+
+    /** Release a frame pinned through this scope NOW — a loop's superseded
+      * round, once its successor is materialized. */
+    def release(df: DataFrame): Unit = {
+      val (mine, rest) = pins.partition(_._1 eq df)
+      require(mine.nonEmpty, "release: frame was not pinned through this scope")
+      pins = rest
+      mine.foreach(_._2())
+    }
+
+    /** Hand a pinned frame to the caller without a new job: it is NOT
+      * released at exit (the returned-checkpoint contract). */
+    def keep(df: DataFrame): DataFrame = {
+      require(pins.exists(_._1 eq df), "keep: frame was not pinned through this scope")
+      pins = pins.filterNot(_._1 eq df)
       df
     }
 
@@ -67,14 +103,14 @@ object Blocks {
       r
     }
 
-    private[Blocks] def release(): Unit = releases.foreach(_())
+    private[Blocks] def releaseAll(): Unit = pins.foreach(_._2())
   }
 
   /** Run `body` with a fresh [[Scope]] and release everything pinned
     * through it when `body` returns or throws. */
   def scope[A](body: Scope => A): A = {
     val s = new Scope
-    try body(s) finally s.release()
+    try body(s) finally s.releaseAll()
   }
 
   /** Unpersist the materialized RDD blocks behind each frame's

@@ -440,16 +440,15 @@ object Dedup {
     if (nPairs <= localThreshold) return localConnectedComponents(pairs)
     val parts = math.max(1, math.min((nPairs / 100000L).toInt + 1,
       pairs.sparkSession.sparkContext.defaultParallelism))
-    Blocks.scope { scope =>
+    Blocks.scope { s =>
       // undirected: propagate labels both ways
-      val edges = scope.persist(
+      val edges = s.persist(
         pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
           .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
           .repartition(parts))
-      var labels = edges.select(col("a").as("node")).distinct()
+      var labels = s.checkpoint(edges.select(col("a").as("node")).distinct()
         .select(col("node"), col("node").as("lbl"))
-        .repartition(parts)
-        .localCheckpoint(true)
+        .repartition(parts))
       // Convergence probe: labels only ever DECREASE under min-propagation,
       // so the label sum is strictly monotone until the fixpoint — one tiny
       // aggregate per round instead of a change-counting self-join.
@@ -473,25 +472,22 @@ object Dedup {
         // as components converge (a giant component hashes every row to one
         // label), and the extra per-round shuffle + checkpoint swamps the
         // round savings; dup-cluster graphs have tiny diameters anyway.
-        val next = edges.join(labels, edges("b") === labels("node"))
+        val next = s.checkpoint(edges.join(labels, edges("b") === labels("node"))
           .select(edges("a").as("node"), col("lbl"))
           .union(labels)
-          .groupBy("node").agg(min(col("lbl")).as("lbl"))
-          .localCheckpoint(true)
-        val s = lblSum(next)
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        Blocks.releaseLocal(labels) // next is materialized; labels is dead
+          .groupBy("node").agg(min(col("lbl")).as("lbl")))
+        val total = lblSum(next)
+        converged = total.compareTo(prevSum) == 0
+        prevSum = total
+        s.release(labels) // next is materialized; labels is dead
         labels = next
         round += 1
       }
-      if (!converged) {
-        Blocks.releaseLocal(labels)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxRounds rounds")
-      }
-      // the last round's checkpoint backs the result (ContextCleaner-retired)
-      labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
+      if (!converged) throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxRounds rounds")
+      // the last round's checkpoint backs the result: the caller's to
+      // release (the returned-checkpoint contract)
+      s.keep(labels).select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
     }
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.Blocks
 
 /** Distributed graph centrality for corpus curation. A web-scale training
   * corpus carries an implicit graph (pages link pages, users touch
@@ -34,12 +34,14 @@ object Graph {
     * of core count and scale factor. */
   val PrGroupCap = 10000L
 
-  /** Rank-lineage truncation cadence in [[pageRank]]: localCheckpoint
-    * every this-many rounds (the final round always truncates — the
-    * returned frame is materialized). The per-round plan is LINEAR in
-    * rounds (ranks is referenced once per round), so this is a plan-depth
-    * bound, not a correctness guard; 2 halves the materialization jobs
-    * (GraphAb5 A/B) while keeping the inlined window small. */
+  /** Lineage truncation cadence of the LINEAR round loops — [[pageRank]]
+    * and the BPE trainer ([[graft.text.Bpe.trainFromVocab]]):
+    * localCheckpoint every this-many rounds (pageRank's final round always
+    * truncates — the returned frame is materialized). Each round reads
+    * the previous state once, so this is a plan-depth bound, not a
+    * correctness guard; 2 halves the materialization jobs against
+    * truncating every round (interleaved same-JVM A/B at sf0.1) while
+    * keeping the inlined window small. */
   val PrCkptRounds = 2
 
   /** Damped PageRank over an edge multigraph, `iters` synchronous
@@ -98,51 +100,45 @@ object Graph {
     // this round and LOST: the two extra materialization jobs plus the
     // per-round InMemoryTableScan cost more than the saved exchanges at
     // bench scale, 4.7-5.3 s → 5.0-7.2 s. Kept the checkpoint leaf.)
-    val ed = e.join(outdeg, "src")
-      .groupBy(col("src"),
-        pmod(xxhash64(col("dst")),
-          greatest(lit(1L), expr(s"od DIV $PrGroupCap"))).as("bkt"))
-      .agg(first(col("od")).as("od"), collect_list(col("dst")).as("dsts"))
-      .localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-    val base = (15L * scale) / 100L
-    var ranks: DataFrame = nodes.select(col("node"), lit(scale).as("rank"))
-      .localCheckpoint(true)
-    // Checkpoint CADENCE (r15, interleave-A/B'd): each round references
-    // the previous ranks exactly ONCE, so the un-truncated plan grows
-    // only LINEARLY in rounds — unlike kCore's branching reads there is
-    // no exponential hazard, and truncating every round just pays a
-    // materialization job per round. Truncating every PrCkptRounds
-    // rounds keeps the plan ≤ that many rounds deep and drops half the
-    // materialization jobs: 3.25-5.24 s → 2.92-3.46 s on the full query
-    // at sf0.1 (graft.tools.GraphAb5; cadence 5 measured the same as 2 —
-    // 2 is kept as the conservative depth bound). Ranks bit-identical
-    // (same integer arithmetic, equivalence asserted at sf0.01 + sf0.1).
-    var lastCkpt = ranks
-    for (i <- 0 until iters) {
-      val contribs = ed.join(ranks, ed("src") === ranks("node"))
-        .select(explode(col("dsts")).as("node"), expr("rank DIV od").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("insum"))
-      val nextRaw = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(s"85 * coalesce(insum, 0L) DIV 100")).as("rank"))
-      if ((i + 1) % PrCkptRounds == 0 || i == iters - 1) {
-        val next = nextRaw.localCheckpoint(true) // eager: consumes prior rounds
-        graft.Blocks.releaseLocal(lastCkpt) // deterministic, not ContextCleaner
-        lastCkpt = next
-        ranks = next
-      } else ranks = nextRaw
+    Blocks.scope { s =>
+      val ed = s.checkpoint(e.join(outdeg, "src")
+        .groupBy(col("src"),
+          pmod(xxhash64(col("dst")),
+            greatest(lit(1L), expr(s"od DIV $PrGroupCap"))).as("bkt"))
+        .agg(first(col("od")).as("od"), collect_list(col("dst")).as("dsts")))
+      val nodes = s.checkpoint(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node")))
+        .distinct())
+      val base = (15L * scale) / 100L
+      var ranks = s.checkpoint(nodes.select(col("node"), lit(scale).as("rank")))
+      // Checkpoint CADENCE (r15, interleave-A/B'd): each round references
+      // the previous ranks exactly ONCE, so the un-truncated plan grows
+      // only LINEARLY in rounds — unlike kCore's branching reads there is
+      // no exponential hazard, and truncating every round just pays a
+      // materialization job per round. Truncating every PrCkptRounds
+      // rounds keeps the plan ≤ that many rounds deep and drops half the
+      // materialization jobs: 3.25-5.24 s → 2.92-3.46 s on the full query
+      // at sf0.1 (cadence 5 measured the same as 2 — 2 is kept as the
+      // conservative depth bound). Ranks bit-identical (same integer
+      // arithmetic, equivalence asserted at sf0.01 + sf0.1).
+      var lastCkpt = ranks
+      for (i <- 0 until iters) {
+        val contribs = ed.join(ranks, ed("src") === ranks("node"))
+          .select(explode(col("dsts")).as("node"), expr("rank DIV od").as("c"))
+          .groupBy("node").agg(sum(col("c")).as("insum"))
+        ranks = nodes.join(contribs, Seq("node"), "left")
+          .select(col("node"),
+            (lit(base) + expr(s"85 * coalesce(insum, 0L) DIV 100")).as("rank"))
+        if ((i + 1) % PrCkptRounds == 0 || i == iters - 1) {
+          ranks = s.checkpoint(ranks) // eager: consumes prior rounds
+          s.release(lastCkpt)
+          lastCkpt = ranks
+        }
+      }
+      // the standing relations die with the scope; the RETURNED ranks
+      // checkpoint is the caller's (the returned-checkpoint contract)
+      s.keep(ranks)
     }
-    // the loop's standing relations are done once the final ranks are
-    // materialized (checkpointing is eager); a long-lived driver calling
-    // pageRank repeatedly must not accrete their blocks until GC. The
-    // RETURNED ranks checkpoint stays — the caller owns it (release it
-    // with graft.Blocks.releaseLocal once consumed).
-    graft.Blocks.releaseLocal(ed, nodes)
-    ranks
   }
 
   /** k-core peeling (Seidman, "Network structure and minimum degree",
@@ -174,49 +170,58 @@ object Graph {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    var prev = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .localCheckpoint(true)
     val rows = collection.mutable.Buffer.empty[(Int, Long, Long, Long)]
-    var r = 1
-    var fixed = false
-    while (r <= rounds && !fixed) {
-      val deg = prev.select(explode(array(col("a"), col("b"))).as("u"))
-        .groupBy("u").agg(count(lit(1)).as("dg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // ONE census job for both scalars (was two passes over deg)
-      val cens = deg.agg(count(lit(1)).as("n"),
-        count(when(col("dg") < k, lit(1))).as("r")).head()
-      val nNodes = cens.getLong(0)
-      val nRemoved = cens.getLong(1)
-      if (nRemoved == 0L) {
+    Blocks.scope { s =>
+      var prev = s.checkpoint(simple(edges))
+      var r = 1
+      while (r <= rounds) {
+        val (nNodes, nRemoved, next) = peel(s, prev, k)
+        val nEdges = next.count()
         // FIXPOINT: a zero-removal round leaves the edge set identical,
         // and every census value is a deterministic function of it — so
         // each remaining round MUST emit exactly this row. Emit them
         // without re-running the peel (guide §1.2: don't compute what you
         // throw away); the result is provably equal to the full unrolled
-        // replay the oracle runs. n_edges_after = the unchanged edge set.
-        val nEdges = prev.count()
-        deg.unpersist(false)
-        (r to rounds).foreach(i => rows += ((i, nNodes, 0L, nEdges)))
-        fixed = true
-      } else {
-        val keep = deg.where(col("dg") >= k)
-        val next = prev
-          .join(keep.select(col("u").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("u").as("b")), Seq("b"), "left_semi")
-          .localCheckpoint(true) // truncate: plan stays one round deep
-        val nEdges = next.count()
-        deg.unpersist(false)
-        graft.Blocks.releaseLocal(prev) // next is materialized; prev is dead
-        rows += ((r, nNodes, nRemoved, nEdges))
+        // replay the oracle runs.
+        val upTo = if (nRemoved == 0L) rounds else r
+        (r to upTo).foreach(i => rows += ((i, nNodes, nRemoved, nEdges)))
         prev = next
-        r += 1
+        r = upTo + 1
       }
     }
-    // the census rows are driver-side scalars: the last survivor set's
-    // checkpoint is dead too
-    graft.Blocks.releaseLocal(prev)
     rows.toSeq.toDF("round", "n_nodes", "n_removed", "n_edges_after")
+  }
+
+  /** (a, b) cast to long — the simple-graph edge form every builder reads. */
+  private def simple(edges: DataFrame): DataFrame =
+    edges.select(col("a").cast("long"), col("b").cast("long"))
+
+  /** (u, dg): node degrees of an (a, b) edge relation. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(explode(array(col("a"), col("b"))).as("u"))
+      .groupBy("u").agg(count(lit(1)).as("dg"))
+
+  /** One synchronous k-core peel round inside `s`, shared by [[kCore]] and
+    * [[kCoreFixpoint]]: the degree census (ONE job for both scalars) and
+    * the surviving edge set — checkpointed through `s` so the plan stays
+    * one round deep, with `prev` retired — or `prev` itself when the round
+    * removes nothing. Returns (n_nodes, n_removed, survivors). */
+  private def peel(s: Blocks.Scope, prev: DataFrame, k: Int): (Long, Long, DataFrame) = {
+    val deg = s.persist(degrees(prev))
+    val cens = deg.agg(count(lit(1)).as("n"),
+      count(when(col("dg") < k, lit(1))).as("r")).head()
+    val next = if (cens.getLong(1) == 0L) prev else {
+      val keep = deg.where(col("dg") >= k)
+      // re-select: a USING-column semi-join hoists its key column first
+      val survivors = s.checkpoint(prev
+        .join(keep.select(col("u").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("u").as("b")), Seq("b"), "left_semi")
+        .select(col("a"), col("b")))
+      s.release(prev)
+      survivors
+    }
+    s.release(deg)
+    (cens.getLong(0), cens.getLong(1), next)
   }
 
   /** k-truss peeling (Cohen, "Trussness: cohesive subgraphs for social
@@ -251,68 +256,60 @@ object Graph {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    var prev = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .localCheckpoint(true)
     val rows = collection.mutable.Buffer.empty[(Int, Long, Long, Long)]
-    var r = 1
-    var fixed = false
-    var carried = -1L // round r's edge count IS round r−1's nAfter
-    while (r <= rounds && !fixed) {
-      val nEdges = if (carried >= 0L) carried else prev.count()
-      if (nEdges == 0L) {
-        // empty graph is trivially the fixpoint: every remaining round
-        // counts zero triangles over zero edges — emit the rows directly
-        // (provably identical to the unrolled replay; same rule as kCore)
-        (r to rounds).foreach(i => rows += ((i, 0L, 0L, 0L)))
-        fixed = true
-      } else {
-        val deg = prev.select(explode(array(col("a"), col("b"))).as("u"))
-          .groupBy("u").agg(count(lit(1)).as("dg"))
-        val da = deg.select(col("u").as("a"), col("dg").as("da"))
-        val db = deg.select(col("u").as("b"), col("dg").as("db"))
-        val fwdCond = col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b"))
-        // oriented edge + its canonical key, persisted: three self-join arms
-        val fwd = prev.join(da, "a").join(db, "b")
-          .select(col("a"), col("b"),
-            when(fwdCond, col("a")).otherwise(col("b")).as("s"),
-            when(fwdCond, col("b")).otherwise(col("a")).as("t"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val e1 = fwd.select(col("s").as("x"), col("t").as("y"),
-          col("a").as("a1"), col("b").as("b1"))
-        val e2 = fwd.select(col("s").as("y"), col("t").as("z"),
-          col("a").as("a2"), col("b").as("b2"))
-        val e3 = fwd.select(col("s").as("x"), col("t").as("z"),
-          col("a").as("a3"), col("b").as("b3"))
-        val support = e1.join(e2, "y").join(e3, Seq("x", "z"))
-          .select(explode(array(
-            struct(col("a1").as("a"), col("b1").as("b")),
-            struct(col("a2").as("a"), col("b2").as("b")),
-            struct(col("a3").as("a"), col("b3").as("b")))).as("e"))
-          .select(col("e.a"), col("e.b"))
-          .groupBy("a", "b").agg(count(lit(1)).as("sup"))
-        val next = prev.join(support, Seq("a", "b"), "left")
-          .where(coalesce(col("sup"), lit(0L)) >= lit((k - 2).toLong))
-          .select(col("a"), col("b"))
-          .localCheckpoint(true) // truncate: plan stays one round deep
-        val nAfter = next.count()
-        fwd.unpersist(false)
-        graft.Blocks.releaseLocal(prev) // next is materialized; prev is dead
-        rows += ((r, nEdges, nEdges - nAfter, nAfter))
-        prev = next
-        carried = nAfter
-        if (nAfter == nEdges) {
+    Blocks.scope { s =>
+      var prev = s.checkpoint(simple(edges))
+      var r = 1
+      var carried = -1L // round r's edge count IS round r−1's nAfter
+      while (r <= rounds) {
+        val nEdges = if (carried >= 0L) carried else prev.count()
+        if (nEdges == 0L) {
+          // empty graph is trivially the fixpoint: every remaining round
+          // counts zero triangles over zero edges — emit the rows directly
+          // (provably identical to the unrolled replay; same rule as kCore)
+          (r to rounds).foreach(i => rows += ((i, 0L, 0L, 0L)))
+          r = rounds + 1
+        } else {
+          val deg = degrees(prev)
+          val da = deg.select(col("u").as("a"), col("dg").as("da"))
+          val db = deg.select(col("u").as("b"), col("dg").as("db"))
+          val fwdCond = col("da") < col("db") ||
+            (col("da") === col("db") && col("a") < col("b"))
+          // oriented edge + its canonical key, persisted: three self-join arms
+          val fwd = s.persist(prev.join(da, "a").join(db, "b")
+            .select(col("a"), col("b"),
+              when(fwdCond, col("a")).otherwise(col("b")).as("s"),
+              when(fwdCond, col("b")).otherwise(col("a")).as("t")))
+          val e1 = fwd.select(col("s").as("x"), col("t").as("y"),
+            col("a").as("a1"), col("b").as("b1"))
+          val e2 = fwd.select(col("s").as("y"), col("t").as("z"),
+            col("a").as("a2"), col("b").as("b2"))
+          val e3 = fwd.select(col("s").as("x"), col("t").as("z"),
+            col("a").as("a3"), col("b").as("b3"))
+          val support = e1.join(e2, "y").join(e3, Seq("x", "z"))
+            .select(explode(array(
+              struct(col("a1").as("a"), col("b1").as("b")),
+              struct(col("a2").as("a"), col("b2").as("b")),
+              struct(col("a3").as("a"), col("b3").as("b")))).as("e"))
+            .select(col("e.a"), col("e.b"))
+            .groupBy("a", "b").agg(count(lit(1)).as("sup"))
+          val next = s.checkpoint(prev.join(support, Seq("a", "b"), "left")
+            .where(coalesce(col("sup"), lit(0L)) >= lit((k - 2).toLong))
+            .select(col("a"), col("b"))) // truncate: plan stays one round deep
+          val nAfter = next.count()
+          s.release(fwd)
+          s.release(prev) // next is materialized; prev is dead
           // FIXPOINT: zero removals mean the support recount over the
           // unchanged edge set must repeat verbatim — emit the remaining
           // census rows without re-running it (same proof as kCore)
-          ((r + 1) to rounds).foreach(i => rows += ((i, nEdges, 0L, nEdges)))
-          fixed = true
+          val upTo = if (nAfter == nEdges) rounds else r
+          (r to upTo).foreach(i => rows += ((i, nEdges, nEdges - nAfter, nAfter)))
+          prev = next
+          carried = nAfter
+          r = upTo + 1
         }
-        r += 1
       }
     }
-    // census rows are driver-side scalars: the last round's edges are dead
-    graft.Blocks.releaseLocal(prev)
     rows.toSeq.toDF("round", "n_edges", "n_removed", "n_edges_after")
   }
 
@@ -330,35 +327,19 @@ object Graph {
   def kCoreFixpoint(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var prev = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .localCheckpoint(true)
-    var converged = false
-    var r = 0
-    while (!converged && r < maxRounds) {
-      val deg = prev.select(explode(array(col("a"), col("b"))).as("u"))
-        .groupBy("u").agg(count(lit(1)).as("dg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nRemoved = deg.where(col("dg") < k).count()
-      if (nRemoved == 0L) {
-        converged = true
-        deg.unpersist(false)
-      } else {
-        val keep = deg.where(col("dg") >= k)
-        // re-select: a USING-column semi-join hoists its key column first
-        val next = prev
-          .join(keep.select(col("u").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("u").as("b")), Seq("b"), "left_semi")
-          .select(col("a"), col("b"))
-          .localCheckpoint(true)
-        next.count() // materialize before dropping deg
-        deg.unpersist(false)
-        graft.Blocks.releaseLocal(prev) // next is materialized; prev is dead
+    Blocks.scope { s =>
+      var prev = s.checkpoint(simple(edges))
+      var converged = false
+      var r = 0
+      while (!converged && r < maxRounds) {
+        val (_, nRemoved, next) = peel(s, prev, k)
+        converged = nRemoved == 0L
         prev = next
+        r += 1
       }
-      r += 1
+      // prev is the RESULT: its checkpoint is the caller's to release
+      s.keep(prev)
     }
-    // prev is the RESULT: its checkpoint is the caller's to release
-    prev
   }
 
   /** Synchronous label-propagation community detection (Raghavan, Albert
@@ -387,17 +368,17 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val dir = lpaDirected(edges)
-    var labels = lpaStart(dir)
-    for (_ <- 0 until rounds) {
-      val next = lpaStep(dir, labels) // eager: consumes the previous round
-      graft.Blocks.releaseLocal(labels)
-      labels = next
+    Blocks.scope { s =>
+      val dir = lpaDirected(s, edges)
+      var labels = lpaStart(s, dir)
+      for (_ <- 0 until rounds) {
+        val next = lpaStep(s, dir, labels) // eager: consumes the previous round
+        s.release(labels)
+        labels = next
+      }
+      // the RETURNED labels checkpoint is the caller's to release
+      s.keep(labels)
     }
-    // deterministic release of the loop's standing relation; the RETURNED
-    // labels checkpoint is the caller's to release once consumed
-    graft.Blocks.releaseLocal(dir)
-    labels
   }
 
   /** [[labelPropagation]] with a per-round convergence census instead of
@@ -416,40 +397,35 @@ object Graph {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    val dir = lpaDirected(edges)
-    var labels = lpaStart(dir)
     val rows = collection.mutable.Buffer.empty[(Int, Long, Long)]
-    var r = 1
-    var fixed = false
-    while (r <= rounds && !fixed) {
-      val prev = labels
-      labels = lpaStep(dir, labels)
-      // ONE census job per round instead of two: both readouts aggregate
-      // the same (new label, prev label) relation — the join is inner on
-      // node, and every round relabels every node, so the distinct-label
-      // count over the join equals the count over the new labels alone
-      val census = labels
-        .join(prev.select(col("node"), col("label").as("pl")), "node")
-        .agg(countDistinct(col("label")).as("nl"),
-          count(when(col("label") =!= col("pl"), lit(1))).as("nch"))
-        .head()
-      val nLabels = census.getLong(0)
-      val nChanged = census.getLong(1)
-      // prev is consumed by the census join: release its checkpoint NOW —
-      // only (prev, cur) are ever live together, deterministically
-      graft.Blocks.releaseLocal(prev)
-      rows += ((r, nLabels, nChanged))
-      if (nChanged == 0L) {
+    Blocks.scope { s =>
+      val dir = lpaDirected(s, edges)
+      var labels = lpaStart(s, dir)
+      var r = 1
+      while (r <= rounds) {
+        val prev = labels
+        labels = lpaStep(s, dir, labels)
+        // ONE census job per round instead of two: both readouts aggregate
+        // the same (new label, prev label) relation — the join is inner on
+        // node, and every round relabels every node, so the distinct-label
+        // count over the join equals the count over the new labels alone
+        val census = labels
+          .join(prev.select(col("node"), col("label").as("pl")), "node")
+          .agg(countDistinct(col("label")).as("nl"),
+            count(when(col("label") =!= col("pl"), lit(1))).as("nch"))
+          .head()
+        val (nLabels, nChanged) = (census.getLong(0), census.getLong(1))
+        // prev is consumed by the census join: release its checkpoint NOW —
+        // only (prev, cur) are ever live together, deterministically
+        s.release(prev)
         // FIXPOINT: labels_{r+1} = F(labels_r) and labels_r = labels_{r-1}
         // pin every later round to the identical labeling — emit the
         // remaining census rows without re-stepping (same proof as kCore)
-        ((r + 1) to rounds).foreach(i => rows += ((i, nLabels, 0L)))
-        fixed = true
+        val upTo = if (nChanged == 0L) rounds else r
+        (r to upTo).foreach(i => rows += ((i, nLabels, nChanged)))
+        r = upTo + 1
       }
-      r += 1
     }
-    // census rows are driver-side scalars: nothing else stays live
-    graft.Blocks.releaseLocal(dir, labels)
     rows.toSeq.toDF("round", "n_labels", "n_changed")
   }
 
@@ -467,28 +443,23 @@ object Graph {
     * can read it from the census form. */
   def labelPropagationFixpoint(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val dir = lpaDirected(edges)
-    var labels = lpaStart(dir)
-    var converged = false
-    var r = 0
-    while (!converged && r < maxRounds) {
-      val next = lpaStep(dir, labels)
-      val nChanged = next
-        .join(labels.select(col("node"), col("label").as("pl")), "node")
-        .where(col("label") =!= col("pl")).count()
-      if (nChanged == 0L) {
-        converged = true
-        graft.Blocks.releaseLocal(next) // identical to labels: discard it
-      } else {
-        graft.Blocks.releaseLocal(labels)
+    Blocks.scope { s =>
+      val dir = lpaDirected(s, edges)
+      var labels = lpaStart(s, dir)
+      var converged = false
+      var r = 0
+      while (!converged && r < maxRounds) {
+        val next = lpaStep(s, dir, labels)
+        converged = next
+          .join(labels.select(col("node"), col("label").as("pl")), "node")
+          .where(col("label") =!= col("pl")).count() == 0L
+        s.release(labels) // at the fixpoint next is identical to it
         labels = next
+        r += 1
       }
-      r += 1
+      // the RETURNED labels checkpoint is the caller's to release
+      s.keep(labels)
     }
-    // deterministic release of the loop's standing relation; the RETURNED
-    // labels checkpoint is the caller's to release once consumed
-    graft.Blocks.releaseLocal(dir)
-    labels
   }
 
   /** Directed (both-orientation) neighborhood relation, materialized once
@@ -498,23 +469,21 @@ object Graph {
     * (real stats for the per-round join) was interleave-A/B'd this round
     * inside the fused census shape and LOST (2.2-2.6 s → 3.0-3.6 s) —
     * same verdict as [[pageRank]]'s standing relations. */
-  private def lpaDirected(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("a").cast("long"), col("b").cast("long"))
+  private def lpaDirected(s: Blocks.Scope, edges: DataFrame): DataFrame = {
+    val e = simple(edges)
     // both directions: u's neighborhood is every v sharing an edge
-    e.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(e.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(true)
+    s.checkpoint(e.select(col("a").as("u"), col("b").as("v"))
+      .unionAll(e.select(col("b").as("u"), col("a").as("v"))))
   }
 
   /** Round-0 labels: every node labeled with its own id. */
-  private def lpaStart(dir: DataFrame): DataFrame =
-    dir.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
+  private def lpaStart(s: Blocks.Scope, dir: DataFrame): DataFrame =
+    s.checkpoint(dir.select(col("u").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
 
   /** One synchronous LPA round: every node adopts the label most frequent
     * among its neighbors, ties broken by minimum label; the result is
-    * `localCheckpoint`ed so the plan stays one round deep.
+    * checkpointed through `s` so the plan stays one round deep.
     *
     * The argmax-with-min-tie-break is ONE struct aggregate:
     * min over (−cnt, label) is lexicographic, so it picks the maximum
@@ -525,14 +494,13 @@ object Graph {
     * and the per-round persist (guide §2.4); interleaved same-JVM A/B at
     * sf0.1: 2.46–2.77 → 1.41–1.57 s for the 3-round propagation, labelings
     * row-identical. */
-  private def lpaStep(dir: DataFrame, labels: DataFrame): DataFrame =
-    dir.join(labels, dir("v") === labels("node"))
+  private def lpaStep(s: Blocks.Scope, dir: DataFrame, labels: DataFrame): DataFrame =
+    s.checkpoint(dir.join(labels, dir("v") === labels("node"))
       .groupBy(dir("u").as("u"), col("label"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("u").as("node"))
       .agg(min(struct((-col("cnt")).as("nc"), col("label"))).as("m"))
-      .select(col("node"), col("m.label").as("label"))
-      .localCheckpoint(true) // truncate: plan stays one round deep
+      .select(col("node"), col("m.label").as("label")))
 
   /** Newman modularity of a labeling over an undirected simple graph
     * (Newman & Girvan, "Finding and evaluating community structure in
@@ -554,10 +522,9 @@ object Graph {
     * @param labels (node: long, label: long), e.g. [[labelPropagation]]'s
     * @return one row: n_communities, n_edges, intra_edges, modularity
     */
-  def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
+  def modularity(edges: DataFrame, labels: DataFrame): DataFrame = Blocks.scope { s =>
     import org.apache.spark.sql.types.DecimalType
-    val e = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = s.persist(simple(edges))
     val la = labels.select(col("node").as("a"), col("label").as("la"))
     val lb = labels.select(col("node").as("b"), col("label").as("lb"))
     val m = e.count()
@@ -570,7 +537,6 @@ object Graph {
       .agg(count(lit(1)).as("nc"),
         coalesce(sum(col("dc").cast(DecimalType(38, 0)) * col("dc")),
           lit(0).cast(DecimalType(38, 0))).as("sumdc2"))
-    e.unpersist(false)
     val fourM = BigDecimal(4L * m)
     byC.select(col("nc").as("n_communities"), lit(m).as("n_edges"),
       lit(intra).as("intra_edges"),
@@ -601,9 +567,8 @@ object Graph {
   def assortativity(edges: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
-    val e = edges.select(col("a").cast("long"), col("b").cast("long"))
-    val deg = e.select(explode(array(col("a"), col("b"))).as("u"))
-      .groupBy("u").agg(count(lit(1)).as("dg"))
+    val e = simple(edges)
+    val deg = degrees(e)
     val da = deg.select(col("u").as("a"), col("dg").as("da"))
     val db = deg.select(col("u").as("b"), col("dg").as("db"))
     val dir = e.join(da, "a").join(db, "b")
@@ -715,14 +680,14 @@ object Graph {
     */
   def triangleInsert(
       history: DataFrame, delta: DataFrame, standingTriangles: Long,
-      standingDegrees: Option[DataFrame] = None): DataFrame = {
+      standingDegrees: Option[DataFrame] = None): DataFrame = Blocks.scope { s =>
     val spark = history.sparkSession
-    val h = history.select(col("a").cast("long"), col("b").cast("long"))
-    val d0 = delta.select(col("a").cast("long"), col("b").cast("long"))
+    val h = simple(history)
+    val d0 = simple(delta)
     // probe side s / key side t per delta edge: degree-ordered when
     // standing degrees are available, endpoint a otherwise. The order is
     // a total order ((dg, id) lexicographic), so s is deterministic.
-    val d = standingDegrees.map { degs =>
+    val d = s.persist(standingDegrees.map { degs =>
       val dg = degs.select(col("u").cast("long").as("u"),
         col("dg").cast("long").as("dg"))
       val lower = coalesce(col("dga"), lit(0L)) < coalesce(col("dgb"), lit(0L)) ||
@@ -733,8 +698,7 @@ object Graph {
         .select(col("a"), col("b"),
           when(lower, col("a")).otherwise(col("b")).as("s"),
           when(lower, col("b")).otherwise(col("a")).as("t"))
-    }.getOrElse(d0.select(col("a"), col("b"), col("a").as("s"), col("b").as("t")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    }.getOrElse(d0.select(col("a"), col("b"), col("a").as("s"), col("b").as("t"))))
     // adjacency of history ∪ delta in both directions, carrying the
     // canonical edge key + the delta flag the order filter needs
     def directed(e: DataFrame, isD: Boolean) = {
@@ -745,8 +709,8 @@ object Graph {
         .unionAll(base.select(col("b").as("u"), col("a").as("w"), col("isd"),
           col("ka"), col("kb")))
     }
-    val adj = directed(h, isD = false).unionAll(directed(d0, isD = true))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = s.persist(
+      directed(h, isD = false).unionAll(directed(d0, isD = true)))
     // closing edge admissible for delta edge (a, b): from history, or a
     // strictly smaller delta edge — the exactly-once charging rule
     // (keyed on the CANONICAL (a, b), independent of probe orientation)
@@ -760,7 +724,6 @@ object Graph {
         col("y.u") === col("d.t") && col("y.w") === col("x.w") &&
           admissible("y"))
       .count()
-    d.unpersist(false); adj.unpersist(false)
     spark.range(1).select(
       lit(standingTriangles).as("n_tri_history"),
       lit(nNew).as("n_tri_delta"),
@@ -834,32 +797,28 @@ object Graph {
     * @param delta           (a: long, b: long), any orientation
     * @param theta           the SAME heavy threshold the view was built at
     * @return the view of standing ∪ delta, classified by the UPDATED
-    *         degrees at `theta` (pair with [[degreeMaintain]]'s output)
+    *         degrees at `theta` (pair with [[degreeMaintain]]'s output) —
+    *         materialized and cached under the one-shot result contract
+    *         ([[graft.Blocks]]): `unpersist` it once consumed
     */
   def wedgeViewMaintain(
       view: DataFrame, standingEdges: DataFrame, standingDegrees: DataFrame,
-      delta: DataFrame, theta: Long): DataFrame = {
+      delta: DataFrame, theta: Long): DataFrame = Blocks.scope { s =>
     require(theta >= 1, s"theta must be >= 1, got $theta")
     def canon(e: DataFrame) = e.select(
       least(col("a"), col("b")).cast("long").as("a"),
       greatest(col("a"), col("b")).cast("long").as("b"))
     val h = canon(standingEdges)
-    // localCheckpoint (eager), NOT persist: the function returns a LAZY
-    // frame, so there is no post-action unpersist point — a persist here
-    // would pin these in the CacheManager for the life of the session
-    // (one leak per maintenance batch in a standing-view deployment),
-    // while checkpoint blocks are released by the ContextCleaner once the
-    // frame is garbage-collected.
-    val fresh = canon(delta).distinct()
-      .join(h, Seq("a", "b"), "left_anti")
-      .localCheckpoint(true)
+    // checkpointed, each read by several arms below; all three die with
+    // the scope once the returned view is materialized
+    val fresh = s.checkpoint(canon(delta).distinct()
+      .join(h, Seq("a", "b"), "left_anti"))
     val dg0 = standingDegrees
       .select(col("u").cast("long"), col("dg").cast("long"))
     val dgNew = degreeMerge(dg0, fresh)
     val heavyOld = dg0.where(col("dg") >= theta).select(col("u"))
     val heavyNew = dgNew.where(col("dg") >= theta).select(col("u"))
-    val promoted = heavyNew.join(heavyOld, Seq("u"), "left_anti")
-      .localCheckpoint(true)
+    val promoted = s.checkpoint(heavyNew.join(heavyOld, Seq("u"), "left_anti"))
     def armsOf(e: DataFrame) =
       e.select(col("a").as("w"), col("b").as("u"))
         .unionAll(e.select(col("b").as("w"), col("a").as("u")))
@@ -867,8 +826,7 @@ object Graph {
     // (counted once — the delta arm identifies the wedge), or two delta
     // arms (x.u < y.u counts each unordered pair once; distinct edges
     // sharing both endpoints cannot exist, so u = v is impossible)
-    val armsD = armsOf(fresh).join(heavyOld, Seq("u"), "left_semi")
-      .localCheckpoint(true)
+    val armsD = s.checkpoint(armsOf(fresh).join(heavyOld, Seq("u"), "left_semi"))
     val armsH = armsOf(h).join(heavyOld, Seq("u"), "left_semi")
     val mixed = armsD.as("x").join(armsH.as("y"),
         col("x.w") === col("y.w"))
@@ -903,7 +861,7 @@ object Graph {
       .select(least(col("x.u"), col("y.u")).as("u"),
         greatest(col("x.u"), col("y.u")).as("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("wedges"))
-    mergedOld.where(col("wedges") > 0).unionAll(promPairs)
+    s.result(mergedOld.where(col("wedges") > 0).unionAll(promPairs))
   }
 
   /** [[triangleInsert]] with a WORST-CASE per-edge bound — the heavy/light
@@ -946,21 +904,19 @@ object Graph {
   def triangleInsertBounded(
       history: DataFrame, delta: DataFrame, standingTriangles: Long,
       standingDegrees: DataFrame, wedgeView: DataFrame,
-      theta: Long): DataFrame = {
+      theta: Long): DataFrame = Blocks.scope { s =>
     require(theta >= 1, s"theta must be >= 1, got $theta")
     val spark = history.sparkSession
-    val h = history.select(col("a").cast("long"), col("b").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val d0 = delta.select(col("a").cast("long"), col("b").cast("long"))
+    val h = s.persist(simple(history))
+    val d0 = simple(delta)
     val dg = standingDegrees
       .select(col("u").cast("long"), col("dg").cast("long"))
-    val d = d0
+    val d = s.persist(d0
       .join(dg.select(col("u").as("a"), col("dg").as("dga")), Seq("a"), "left")
       .join(dg.select(col("u").as("b"), col("dg").as("dgb")), Seq("b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("dga"), lit(0L)).as("dga"),
-        coalesce(col("dgb"), lit(0L)).as("dgb"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        coalesce(col("dgb"), lit(0L)).as("dgb")))
     // ---- exactly-one-delta-edge triangles: standing wedges of (a, b)
     val viewK = wedgeView.select(col("u").as("a"), col("v").as("b"),
       col("wedges").cast("long").as("wedges"))
@@ -984,11 +940,10 @@ object Graph {
           col("kb") === greatest(col("t"), col("w")))
       .count()
     // ---- ≥-two-delta-edge triangles, charged to the largest delta edge
-    val adjD = d0.select(col("a").as("u"), col("b").as("w"),
+    val adjD = s.persist(d0.select(col("a").as("u"), col("b").as("w"),
         col("a").as("ka"), col("b").as("kb"))
       .unionAll(d0.select(col("b").as("u"), col("a").as("w"),
-        col("a").as("ka"), col("b").as("kb")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        col("a").as("ka"), col("b").as("kb"))))
     def smaller(side: String) =
       col(s"$side.ka") < col("d.a") ||
         (col(s"$side.ka") === col("d.a") && col(s"$side.kb") < col("d.b"))
@@ -1016,7 +971,6 @@ object Graph {
           col("k.kb") === greatest(col("d.a"), col("y.w")))
       .count()
     val nNew = t1Heavy + t1Light + caseA + caseB
-    h.unpersist(false); d.unpersist(false); adjD.unpersist(false)
     spark.range(1).select(
       lit(standingTriangles).as("n_tri_history"),
       lit(nNew).as("n_tri_delta"),
@@ -1046,13 +1000,10 @@ object Graph {
     * @param edges (a: long, b: long) with a < b, distinct (a simple graph)
     * @return one row: n_nodes, n_edges, n_wedges, n_triangles, clustering
     */
-  def triangleStats(edges: DataFrame): DataFrame = {
+  def triangleStats(edges: DataFrame): DataFrame = Blocks.scope { s =>
     val spark = edges.sparkSession
-    val e = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = e.select(explode(array(col("a"), col("b"))).as("u"))
-      .groupBy("u").agg(count(lit(1)).as("dg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = s.persist(simple(edges))
+    val deg = s.persist(degrees(e))
     val nNodes = deg.count()
     val nEdges = e.count()
     // coalesce: an empty graph (possible at tiny SF) sums to null
@@ -1062,15 +1013,13 @@ object Graph {
     val db = deg.select(col("u").as("b"), col("dg").as("db"))
     val fwdCond = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val fwd = e.join(da, "a").join(db, "b")
+    val fwd = s.persist(e.join(da, "a").join(db, "b")
       .select(when(fwdCond, col("a")).otherwise(col("b")).as("s"),
-        when(fwdCond, col("b")).otherwise(col("a")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        when(fwdCond, col("b")).otherwise(col("a")).as("t")))
     val e1 = fwd.select(col("s").as("x"), col("t").as("y"))
     val e2 = fwd.select(col("s").as("y"), col("t").as("z"))
     val e3 = fwd.select(col("s").as("x"), col("t").as("z"))
     val nTri = e1.join(e2, "y").join(e3, Seq("x", "z")).count()
-    e.unpersist(false); deg.unpersist(false); fwd.unpersist(false)
     spark.range(1).select(
       lit(nNodes).as("n_nodes"), lit(nEdges).as("n_edges"),
       lit(nWedges).as("n_wedges"), lit(nTri).as("n_triangles"),

@@ -39,7 +39,7 @@ object Skyline {
 
   /** Skyline of `df` minimizing `minCol` and maximizing `maxCol`; returns
     * the distinct Pareto-front points as (minCol, maxCol). */
-  def skyline2d(df: DataFrame, minCol: String, maxCol: String): DataFrame = {
+  def skyline2d(df: DataFrame, minCol: String, maxCol: String): DataFrame = graft.Blocks.scope { s =>
     import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
     val pts = df.select(col(minCol).cast("double").as("mn"),
       col(maxCol).cast("double").as("mx")).distinct()
@@ -55,14 +55,13 @@ object Skyline {
     // EARLIER partition — and there only by its max mx.
     val pidSchema = StructType(StructField("pid", IntegerType, nullable = false) +:
       pts.schema.fields)
-    val withPid = localSky
+    val withPid = s.persist(localSky
       .repartitionByRange(col("mn").asc)
       .sortWithinPartitions(col("mn").asc, col("mx").desc)
       .mapPartitions { it =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
         scan(it, 0, 1).map(r => Row(pid, r.getDouble(0), r.getDouble(1)))
-      }(org.apache.spark.sql.Encoders.row(pidSchema))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }(org.apache.spark.sql.Encoders.row(pidSchema)))
 
     // Per-partition best mx: P scalar rows (P = shuffle partitions) — the
     // same driver-pull class as a watermark probe. Exclusive running max
@@ -77,16 +76,12 @@ object Skyline {
     // (pid, run) after scanLeft is the INCLUSIVE max; pairing each pid with
     // the PREVIOUS element's running value makes it exclusive.
     val cutOf = cuts.toMap
-    val result =
-      if (cutOf.isEmpty) withPid.select(col("mn").as(minCol), col("mx").as(maxCol))
+    val front =
+      if (cutOf.isEmpty) withPid
       else {
         val entries = cuts.flatMap { case (p, c) => Seq(lit(p), lit(c)) }
         withPid.where(col("mx") > element_at(map(entries: _*), col("pid")))
-          .select(col("mn").as(minCol), col("mx").as(maxCol))
       }
-    val materialized = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    withPid.unpersist(false)
-    materialized
+    s.result(front.select(col("mn").as(minCol), col("mx").as(maxCol)))
   }
 }

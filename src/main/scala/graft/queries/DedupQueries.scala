@@ -277,7 +277,7 @@ object DedupQueries {
     // relation is persisted once and feeds the count, the pair pipeline,
     // and the final anti-join; stage stats are one-row aggregates.
     "curation_funnel" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         import org.apache.spark.sql.types.DecimalType
         val docs = t(s, d, "documents")
         // ONE text scan carries BOTH scan-side signals (quality AND the
@@ -295,10 +295,9 @@ object DedupQueries {
         // funnel into every consumer's plan (see
         // graft.dedup.Dedup.ngramJaccardPairs for the measured rationale;
         // this query read 9.1 s isolated before, 3.7 s after).
-        val scored = docs.select(col("doc_id"), col("n_chars"),
+        val scored = scope.checkpoint(docs.select(col("doc_id"), col("n_chars"),
           TextAnalysis.qualityScore(col("text")).as("quality"),
-          TextAnalysis.fingerprint(col("text")).as("fp"))
-          .localCheckpoint(true)
+          TextAnalysis.fingerprint(col("text")).as("fp")))
         val thr: Double = scored
           .agg((sum(col("quality").cast(DecimalType(18, 6))).cast("double") /
             count(lit(1))).as("t"))
@@ -308,9 +307,8 @@ object DedupQueries {
           .groupBy(col("fp"))
           .agg(min(col("doc_id")).as("doc_id"))
           .select("doc_id")
-        val e = q.select("doc_id", "n_chars")
-          .join(keepers, Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
+        val e = scope.checkpoint(q.select("doc_id", "n_chars")
+          .join(keepers, Seq("doc_id"), "left_semi"))
         val drop = Dedup.connectedComponents(
           Dedup.minHashLshPairs(
             docs.join(e.select("doc_id"), Seq("doc_id"), "left_semi")
@@ -324,17 +322,11 @@ object DedupQueries {
           df.agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
             .select(lit(no).as("stage_no"), lit(name).as("stage"),
               col("n_docs"), col("n_chars"))
-        val result = stat(1L, "raw", docs)
+        scope.result(stat(1L, "raw", docs)
           .unionAll(stat(2L, "quality", q))
           .unionAll(stat(3L, "exact_dedup", e))
           .unionAll(stat(4L, "near_dedup", n4))
-          .orderBy("stage_no")
-          .persist()
-        result.count() // materialize the 4-row card eagerly
-        // every stage is folded into the 4-row card: release the funnel's
-        // checkpoints deterministically (graft.Blocks doc)
-        graft.Blocks.releaseLocal(scored, e)
-        result
+          .orderBy("stage_no"))
       },
       oracle = Some(s"""
         WITH RECURSIVE scored AS (
@@ -482,10 +474,9 @@ object DedupQueries {
     // divisor derives from Dedup.NumHashes on both sides so a hash-count
     // retune cannot silently skew it.
     "dedup_minhash_est_quality" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val docs = t(s, d, "documents")
-        val sigs = sigsShared(s, d).getOrElse(Dedup.minHashSignatures(docs))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val sigs = scope.persist(sigsShared(s, d).getOrElse(Dedup.minHashSignatures(docs)))
         val pairs = pairs08OrDerive(s, d, sigs)
         val sa = sigs.toDF(sigs.columns.map(c =>
           if (c == "doc_id") "doc_a" else s"${c}_a"): _*)
@@ -495,15 +486,11 @@ object DedupQueries {
           .map(i => when(col(s"m${i}_a") === col(s"m${i}_b"), 1).otherwise(0))
           .reduce(_ + _)
         val k = lit(Dedup.NumHashes.toDouble)
-        val out = pairs.join(sa, "doc_a").join(sb, "doc_b")
+        scope.result(pairs.join(sa, "doc_a").join(sb, "doc_b")
           .select(col("doc_a"), col("doc_b"), col("jaccard"),
             round(agree / k, 6).as("est"),
             round(abs(agree / k - col("jaccard")), 6).as("abs_err"))
-          .orderBy("doc_a", "doc_b")
-          .persist()
-        out.count() // materialize while the shared signature cache is live
-        sigs.unpersist(false)
-        out
+          .orderBy("doc_a", "doc_b"))
       },
       oracle = Some(s"""
         WITH ${minhashPairsCtes(0.8)}
@@ -530,10 +517,9 @@ object DedupQueries {
     // pair-bounded. All estimates are integer ratios — exact on both
     // engines.
     "dedup_minhash_bbit" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val docs = t(s, d, "documents")
-        val sigs = sigsShared(s, d).getOrElse(Dedup.minHashSignatures(docs))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val sigs = scope.persist(sigsShared(s, d).getOrElse(Dedup.minHashSignatures(docs)))
         val pairs = pairs08OrDerive(s, d, sigs)
         val sa = sigs.toDF(sigs.columns.map(c =>
           if (c == "doc_id") "doc_a" else s"${c}_a"): _*)
@@ -549,17 +535,13 @@ object DedupQueries {
         val k = lit(Dedup.NumHashes.toDouble)
         val estFull = agreeFull / k
         val estB = greatest(agreeB - 4, lit(0)).cast("double") / lit(12.0)
-        val out = pairs.join(sa, "doc_a").join(sb, "doc_b")
+        scope.result(pairs.join(sa, "doc_a").join(sb, "doc_b")
           .select(col("doc_a"), col("doc_b"), col("jaccard"),
             round(estFull, 6).as("est_full"),
             round(estB, 6).as("est_2bit"),
             round(abs(estFull - col("jaccard")), 6).as("err_full"),
             round(abs(estB - col("jaccard")), 6).as("err_2bit"))
-          .orderBy("doc_a", "doc_b")
-          .persist()
-        out.count() // materialize while the shared signature cache is live
-        sigs.unpersist(false)
-        out
+          .orderBy("doc_a", "doc_b"))
       },
       oracle = Some({
         val agreeBSql = (0 until Dedup.NumHashes)
@@ -594,14 +576,13 @@ object DedupQueries {
     // unmodified production pipeline on the same slice. Both paths AND
     // the intersection count replay in the oracle.
     "dedup_lsh_recall" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val slice = t(s, d, "documents").where(col("doc_id") < 200)
         val lsh = Dedup.minHashLshPairs(slice, threshold = 0.8)
           .select("doc_a", "doc_b")
         // localCheckpoint: sh feeds four join sides (rationale at
         // graft.dedup.Dedup.ngramJaccardPairs)
-        val sh = Dedup.shingles(slice)
-          .localCheckpoint(true)
+        val sh = scope.checkpoint(Dedup.shingles(slice))
         val cand = sh.as("a")
           .join(sh.as("b"),
             col("a.shingle") === col("b.shingle") &&
@@ -619,10 +600,7 @@ object DedupQueries {
             when(col("n_exact") === 0, lit(1.0))
               .otherwise(round(col("n_hit").cast("double") /
                 col("n_exact").cast("double"), 6)).as("recall"))
-        val out = rep.persist()
-        out.count() // materialize the 1-row card eagerly
-        graft.Blocks.releaseLocal(sh) // folded into the 1-row card
-        out
+        scope.result(rep)
       },
       oracle = Some(s"""
         WITH sl AS (SELECT * FROM documents WHERE doc_id < 200),
@@ -667,18 +645,14 @@ object DedupQueries {
     // pair pipeline persisted so its signature scan runs once across the
     // two directional references.
     "dedup_degree_hist" -> QueryDef(
-      fn = (s, d) => {
-        val pairs = pairs08(s, d)
-          .select("doc_a", "doc_b").persist()
-        val out = pairs.select(col("doc_a").as("doc"))
+      fn = (s, d) => graft.Blocks.scope { scope =>
+        val pairs = scope.persist(pairs08(s, d)
+          .select("doc_a", "doc_b"))
+        scope.result(pairs.select(col("doc_a").as("doc"))
           .unionAll(pairs.select(col("doc_b").as("doc")))
           .groupBy("doc").agg(count(lit(1)).as("degree"))
           .groupBy("degree").agg(count(lit(1)).as("n_docs"))
-          .orderBy("degree")
-          .persist()
-        out.count() // materialize while the pair cache is live
-        pairs.unpersist(false)
-        out
+          .orderBy("degree"))
       },
       oracle = Some(s"""
         WITH ${minhashPairsCtes(0.8)},
@@ -751,12 +725,11 @@ object DedupQueries {
     // relation, never the corpus. est = agree/16 is an exact power-of-two
     // division on both engines, so cut comparisons cannot drift.
     "dedup_threshold_sweep" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val slice = t(s, d, "documents").where(col("doc_id") < 200)
         // localCheckpoint: sh feeds four join sides (rationale at
         // graft.dedup.Dedup.ngramJaccardPairs)
-        val sh = Dedup.shingles(slice)
-          .localCheckpoint(true)
+        val sh = scope.checkpoint(Dedup.shingles(slice))
         val cand = sh.as("a")
           .join(sh.as("b"),
             col("a.shingle") === col("b.shingle") &&
@@ -771,13 +744,12 @@ object DedupQueries {
         val agree = (0 until Dedup.NumHashes)
           .map(i => when(col(s"m${i}_a") === col(s"m${i}_b"), 1).otherwise(0))
           .reduce(_ + _)
-        val scored = Dedup.jaccard(cand, sh)
+        val scored = scope.checkpoint(Dedup.jaccard(cand, sh)
           .join(sa, "doc_a").join(sb, "doc_b")
           .select(col("jaccard"),
-            (agree.cast("double") / Dedup.NumHashes).as("est"))
-          .localCheckpoint(true)
+            (agree.cast("double") / Dedup.NumHashes).as("est")))
         val cuts = Seq(0.7, 0.75, 0.8, 0.85, 0.9)
-        val out = scored
+        scope.result(scored
           .select(col("jaccard"), col("est"),
             explode(array(cuts.map(lit(_)): _*)).as("thr"))
           .groupBy("thr")
@@ -795,11 +767,7 @@ object DedupQueries {
             when(col("n_true") === 0, lit(1.0))
               .otherwise(round(col("n_tp").cast("double")
                 / col("n_true").cast("double"), 6)).as("recall"))
-          .orderBy("thr")
-          .persist()
-        out.count() // materialize the 5-row sweep eagerly
-        graft.Blocks.releaseLocal(sh, scored) // folded into the 5-row sweep
-        out
+          .orderBy("thr"))
       },
       oracle = Some(s"""
         WITH sl AS (SELECT * FROM documents WHERE doc_id < 200),

@@ -1170,23 +1170,21 @@ object MiscQueries {
     // is a single-partition sort over k·groups rows — sketch-sized by
     // construction, never data-sized.
     "agg_kmv_merge" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val k = 64
         val H = 281474976710656.0 // 2^48, the md5-prefix hash range
         // narrow (type, user, hash) distinct relation: feeds the per-group
         // counts, the sketch window, and the exact-global check — persist
         // so the distinct shuffle happens once
-        val pairs = t(s, d, "events")
+        val pairs = scope.persist(t(s, d, "events")
           .select(col("event_type"), col("user_id")).distinct()
           .withColumn("h",
             conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
-              .cast("long"))
-          .persist()
+              .cast("long")))
         val w = Window.partitionBy(col("event_type"))
           .orderBy(col("h"), col("user_id"))
-        val sk = pairs.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= k)
-          .persist()
+        val sk = scope.persist(pairs.withColumn("rn", row_number().over(w))
+          .where(col("rn") <= k))
         val perGroup = pairs.groupBy("event_type")
           .agg(count(lit(1)).as("n_exact"))
           .join(sk.where(col("rn") === k)
@@ -1214,11 +1212,7 @@ object MiscQueries {
               when(col("m") < k, col("m").cast("double"))
                 .otherwise(lit((k - 1).toDouble * H) / col("hk")),
               6).as("est"))
-        val result = perGroup.unionByName(allRow).orderBy("event_type").persist()
-        result.count() // materialize while the sketch cache is live
-        sk.unpersist(false)
-        pairs.unpersist(false)
-        result
+        scope.result(perGroup.unionByName(allRow).orderBy("event_type"))
       },
       oracle = Some("""
         WITH d AS (SELECT DISTINCT event_type, user_id FROM events),
@@ -1272,20 +1266,18 @@ object MiscQueries {
     // the oracle replays sketches, merge, membership flags, and the
     // estimator bit-for-bit.
     "agg_kmv_intersect" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val k = 64
         val H = 281474976710656.0 // 2^48, the md5-prefix hash range
-        val pairs = t(s, d, "events")
+        val pairs = scope.persist(t(s, d, "events")
           .select(col("event_type"), col("user_id")).distinct()
           .withColumn("h",
             conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
-              .cast("long"))
-          .persist()
+              .cast("long")))
         val w = Window.partitionBy(col("event_type"))
           .orderBy(col("h"), col("user_id"))
-        val sk = pairs.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= k)
-          .persist()
+        val sk = scope.persist(pairs.withColumn("rn", row_number().over(w))
+          .where(col("rn") <= k))
         // unordered type pairs (a < b): group-count-sized, tiny
         val types = pairs.select("event_type").distinct()
         val tp = types.select(col("event_type").as("type_a"))
@@ -1325,15 +1317,10 @@ object MiscQueries {
           .where(col("type_a") < col("type_b"))
           .groupBy("type_a", "type_b")
           .agg(count(lit(1)).as("n_exact"))
-        val result = exact.join(est, Seq("type_a", "type_b"), "left")
+        scope.result(exact.join(est, Seq("type_a", "type_b"), "left")
           .select(col("type_a"), col("type_b"), col("n_exact"),
             coalesce(col("est"), lit(0.0)).as("est"))
-          .orderBy("type_a", "type_b")
-          .persist()
-        result.count() // materialize while the sketch cache is live
-        sk.unpersist(false)
-        pairs.unpersist(false)
-        result
+          .orderBy("type_a", "type_b"))
       },
       oracle = Some("""
         WITH d AS (SELECT DISTINCT event_type, user_id FROM events),
@@ -1465,22 +1452,21 @@ object MiscQueries {
     // quantiles carried alongside are verification evidence — their
     // unpartitioned rank window is the very cost the sketch path avoids.
     "agg_quantile_sketch" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val k = 64
         // localCheckpoint: rows feeds the sketch window + the exact side,
         // samp three subtrees — leaf-sized consumer plans instead of
         // re-inlined pins (see graft.dedup.Dedup.ngramJaccardPairs for
         // the measured rationale)
-        val rows = t(s, d, "events")
+        val rows = scope.checkpoint(t(s, d, "events")
           .select(col("event_type"), col("event_id"), col("value"))
           .withColumn("h",
             conv(substring(md5(col("event_id").cast("string")), 1, 12), 16, 10)
-              .cast("long"))
-          .localCheckpoint(true)
+              .cast("long")))
         val ws = Window.partitionBy(col("event_type"))
           .orderBy(col("h"), col("event_id"))
-        val samp = rows.withColumn("rn", row_number().over(ws))
-          .where(col("rn") <= k).localCheckpoint(true)
+        val samp = scope.checkpoint(rows.withColumn("rn", row_number().over(ws))
+          .where(col("rn") <= k))
         // ceil-rank order statistics per group label `g`: p50 at
         // ceil(m/2) = (m+1) DIV 2, p90 at ceil(9m/10) = (9m+9) DIV 10
         def stats(df: org.apache.spark.sql.DataFrame, p50: String,
@@ -1537,10 +1523,7 @@ object MiscQueries {
         // estimates. Bounded at harness scale (60k events); a production
         // deployment drops the *_exact columns and reads the sketch side,
         // whose windows are groups × k = sketch-sized at any corpus size.
-        val result = perG.unionByName(allRow).orderBy("event_type").persist()
-        result.count() // materialize the small card eagerly
-        graft.Blocks.releaseLocal(rows, samp) // all consumers materialized
-        result
+        scope.result(perG.unionByName(allRow).orderBy("event_type"))
       },
       oracle = Some("""
         WITH rws AS (
@@ -2420,15 +2403,13 @@ object MiscQueries {
     // than random; the fixture's co-occurrence graph scores positive
     // because minute-bucket co-activity is genuinely assortative.
     "graph_modularity" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         // both consumers (propagation + modularity) read the edge set:
         // checkpoint the distinct self-join once instead of replaying it
-        val edges = coEdges(s, d).localCheckpoint(true)
-        val labels = graft.operators.Graph.labelPropagation(edges, rounds = LpaRounds)
-        val out = graft.operators.Graph.modularity(edges, labels).persist()
-        out.count() // one-row card: materialize so the checkpoints can go
-        graft.Blocks.releaseLocal(edges, labels)
-        out
+        val edges = scope.checkpoint(coEdges(s, d))
+        val labels = scope.adopt(
+          graft.operators.Graph.labelPropagation(edges, rounds = LpaRounds))
+        scope.result(graft.operators.Graph.modularity(edges, labels))
       },
       oracle = Some(s"""
         $lpaRoundsCte,
@@ -2529,8 +2510,8 @@ object MiscQueries {
     // total row (dg = -1) is always present, so the query returns rows
     // even when the sf0.001 graph is empty (the RegistrySpec contract).
     "graph_degree_incr" -> QueryDef(
-      fn = (s, d) => {
-        val edges = coEdges(s, d).localCheckpoint(true)
+      fn = (s, d) => graft.Blocks.scope { scope =>
+        val edges = scope.checkpoint(coEdges(s, d))
         val delta = edges.where((col("a") + col("b")) % 5 === 0)
         val history = edges.where((col("a") + col("b")) % 5 =!= 0)
         val standing = history
@@ -2541,7 +2522,7 @@ object MiscQueries {
           .unionAll(history.where((col("a") + col("b")) % 3 === 0))
         val maintained = graft.operators.Graph
           .degreeMaintain(standing, history, dirty)
-          .localCheckpoint(true) // two readers below
+          .localCheckpoint(true) // two readers below, and the returned plan
         maintained
           .groupBy("dg").agg(count(lit(1)).as("n_nodes"))
           .unionAll(maintained.agg(
@@ -2579,8 +2560,8 @@ object MiscQueries {
     // decomposition exact (and orientation-independent: the probe side is
     // a cost choice, not a semantic one).
     "graph_triangle_incr" -> QueryDef(
-      fn = (s, d) => {
-        val edges = coEdges(s, d).localCheckpoint(true)
+      fn = (s, d) => graft.Blocks.scope { scope =>
+        val edges = scope.checkpoint(coEdges(s, d))
         val delta = edges.where((col("a") + col("b")) % 5 === 0)
         val history = edges.where((col("a") + col("b")) % 5 =!= 0)
         // the standing state a production pipeline stores (maintained by
@@ -2592,16 +2573,13 @@ object MiscQueries {
         // per endpoint join, and production reads a STORED table — an
         // unpinned inline aggregate would honestly-but-pointlessly run
         // twice per probe
-        val standingDeg = history
+        val standingDeg = scope.checkpoint(history
           .select(explode(array(col("a"), col("b"))).as("u"))
-          .groupBy("u").agg(count(lit(1)).as("dg"))
-          .localCheckpoint(true)
-        val out = graft.operators.Graph.triangleInsert(history, delta,
-          standingTri, standingDegrees = Some(standingDeg))
+          .groupBy("u").agg(count(lit(1)).as("dg")))
         // triangleInsert returns driver-side scalars as a literal row:
-        // nothing references the checkpoints — release them NOW
-        graft.Blocks.releaseLocal(edges, standingDeg)
-        out
+        // nothing references the checkpoints once it returns
+        graft.operators.Graph.triangleInsert(history, delta,
+          standingTri, standingDegrees = Some(standingDeg))
       },
       oracle = Some("""
         WITH bk AS (

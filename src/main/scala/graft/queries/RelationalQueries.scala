@@ -531,9 +531,9 @@ object RelationalQueries {
     // All metrics are exact-integer ratios; single IEEE divisions,
     // rounded at 6dp.
     "events_basket_assoc" -> QueryDef(
-      fn = (s, d) => {
-        val ut = t(s, d, "events")
-          .select(col("user_id"), col("event_type")).distinct().persist()
+      fn = (s, d) => graft.Blocks.scope { scope =>
+        val ut = scope.persist(t(s, d, "events")
+          .select(col("user_id"), col("event_type")).distinct())
         val nUsers = ut.select("user_id").distinct().count()
         val tc = ut.groupBy(col("event_type").as("t")).agg(count(lit(1)).as("n"))
         val pairs = ut.as("x").join(ut.as("y"),
@@ -542,7 +542,7 @@ object RelationalQueries {
           .groupBy(col("x.event_type").as("type_a"),
             col("y.event_type").as("type_b"))
           .agg(count(lit(1)).as("n_both"))
-        val out = pairs
+        scope.result(pairs
           .join(tc.select(col("t").as("type_a"), col("n").as("n_a")), Seq("type_a"))
           .join(tc.select(col("t").as("type_b"), col("n").as("n_b")), Seq("type_b"))
           .select(col("type_a"), col("type_b"), col("n_both"),
@@ -553,11 +553,7 @@ object RelationalQueries {
               .as("confidence"),
             round((col("n_both") * lit(nUsers)).cast("double")
               / (col("n_a") * col("n_b")).cast("double"), 6).as("lift"))
-          .orderBy("type_a", "type_b")
-          .persist()
-        out.count() // materialize while the (user, type) cache is live
-        ut.unpersist(false)
-        out
+          .orderBy("type_a", "type_b"))
       },
       oracle = Some("""
         WITH ut AS (
@@ -1337,7 +1333,7 @@ object RelationalQueries {
     // cost this avoids). Exact converted-user counts ride along as
     // evidence. All-integer order statistics; ceil-rank indices.
     "events_time_to_convert" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val k = 64
         val ev = t(s, d, "events")
           .select(col("user_id"), Tables.eventUs.as("us"), col("event_type"))
@@ -1365,7 +1361,7 @@ object RelationalQueries {
         // explode), not a union of two branches — a union would execute
         // the per-user aggregate twice. delay_us is null exactly when the
         // step did not convert (tb null ⇒ the subtraction is null).
-        val all = perUser
+        val all = scope.persist(perUser
           .select(col("user_id"), explode(array(
             struct(lit("view->click").as("step"),
               (col("tb1") - col("ta1")).as("delay_us")),
@@ -1373,8 +1369,7 @@ object RelationalQueries {
               (col("tb2") - col("ta2")).as("delay_us")))).as("st"))
           .select(col("st.step").as("step"), col("user_id"),
             col("st.delay_us").as("delay_us"))
-          .where(col("delay_us").isNotNull)
-          .persist()
+          .where(col("delay_us").isNotNull))
         val n = all.groupBy("step").agg(count(lit(1)).as("n_converted"))
         val samp = all.withColumn("h",
             conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
@@ -1390,11 +1385,7 @@ object RelationalQueries {
           .select(col("step"), col("delay_us").as("p50_us"))
         val p90 = ranked.where(col("vr") === ceil(col("m") * 0.9))
           .select(col("step"), col("delay_us").as("p90_us"))
-        val out = n.join(p50, "step").join(p90, "step").orderBy("step")
-          .persist()
-        out.count() // materialize while the delay cache is live
-        all.unpersist(false)
-        out
+        scope.result(n.join(p50, "step").join(p90, "step").orderBy("step"))
       },
       oracle = Some("""
         WITH ev AS (
@@ -2327,16 +2318,15 @@ object RelationalQueries {
     // an equi-join, never a range nested-loop. The exact side here is
     // oracle evidence, bounded at harness scale.
     "events_mau_sketch" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val k = 64
         val H = 281474976710656.0 // 2^48, the md5-prefix hash range
         // localCheckpoint: du feeds four subtrees (days, the sketch
         // window, the exact side); materialized blocks behind a leaf plan
         // beat a pin each consumer re-inlines (see
         // graft.dedup.Dedup.ngramJaccardPairs for the measured rationale)
-        val du = t(s, d, "events")
-          .select(Tables.eventDay.as("day"), col("user_id")).distinct()
-          .localCheckpoint(true)
+        val du = scope.checkpoint(t(s, d, "events")
+          .select(Tables.eventDay.as("day"), col("user_id")).distinct())
         val days = du.select(col("day")).distinct()
         val wDay = Window.partitionBy(col("day"))
           .orderBy(col("h"), col("user_id"))
@@ -2376,13 +2366,9 @@ object RelationalQueries {
         // single-partition), bounded at harness scale (≤ 30 days × users).
         // A production deployment drops n_exact and reads the sketch side,
         // whose state is days × k = sketch-sized at any volume.
-        val out = exact.join(est, Seq("day"))
+        scope.result(exact.join(est, Seq("day"))
           .select(col("day"), col("n_exact"), round(col("raw"), 6).as("est"))
-          .orderBy("day")
-          .persist()
-        out.count() // materialize the per-day card eagerly
-        graft.Blocks.releaseLocal(du) // all consumers materialized into out
-        out
+          .orderBy("day"))
       },
       oracle = Some("""
         WITH du AS (

@@ -288,13 +288,12 @@ object SimilarityQueries {
     // threshold-pull pattern as quality_gate) so the outlier count needs
     // no one-row cross join. One scan, vectors never shuffled.
     "emb_norm_outliers" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         import org.apache.spark.sql.types.DecimalType
-        val norms = t(s, d, "embeddings")
+        val norms = scope.persist(t(s, d, "embeddings")
           .select(col("vec_id"),
             round(VectorOps.norm(col("embedding")), 6)
-              .cast(DecimalType(18, 6)).as("nrm"))
-          .persist()
+              .cast(DecimalType(18, 6)).as("nrm")))
         val m = norms
           .agg(count(lit(1)).as("n"), sum(col("nrm")).as("sx"),
             sum(col("nrm") * col("nrm")).as("sxx"),
@@ -309,7 +308,6 @@ object SimilarityQueries {
         val nOut = norms
           .where(abs(col("nrm").cast("double") - lit(mean)) > lit(3.0 * std))
           .count()
-        norms.unpersist(false)
         // HALF_UP to match both engines' round(double, 6)
         def r6(x: Double): Double =
           BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -766,14 +764,13 @@ object SimilarityQueries {
     // projections and both distance sums are exact decimal arithmetic;
     // the closing ratio is one IEEE division by 16·d2 (16 exact).
     "emb_jl_distortion" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-        val ex = t(s, d, "embeddings").where(col("vec_id") < 30)
+        val ex = scope.persist(t(s, d, "embeddings").where(col("vec_id") < 30)
           .select(col("vec_id"),
             posexplode(col("embedding").cast("array<double>"))
               .as(Seq("p0", "x")))
-          .select(col("vec_id"), (col("p0") + 1).as("j"), col("x"))
-          .persist()
+          .select(col("vec_id"), (col("p0") + 1).as("j"), col("x")))
         val sign = conv(
           substring(md5(concat_ws("_", col("i"), col("j"))), 1, 4), 16, 10)
           .cast("long") % 2
@@ -807,16 +804,12 @@ object SimilarityQueries {
               .cast(dec).as("tt"))
           .groupBy("vec_a", "vec_b")
           .agg(sum(col("tt")).cast("double").as("d2_orig"))
-        val out = d2o.join(d2p, Seq("vec_a", "vec_b"))
+        scope.result(d2o.join(d2p, Seq("vec_a", "vec_b"))
           .where(col("d2_orig") > 0)
           .select(col("vec_a"), col("vec_b"), col("d2_orig"), col("d2_proj"),
             round(col("d2_proj") / (lit(16.0) * col("d2_orig")), 6)
               .as("ratio"))
-          .orderBy("vec_a", "vec_b")
-          .persist()
-        out.count() // materialize while the coordinate cache is live
-        ex.unpersist(false)
-        out
+          .orderBy("vec_a", "vec_b"))
       },
       oracle = Some("""
         WITH pr AS (

@@ -222,7 +222,7 @@ object TextQueries {
     * rows with the training caches already released. */
   private def lrNbPerDoc(
       s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = graft.Blocks.scope { scope =>
     import org.apache.spark.sql.expressions.Window
     import graft.text.LogReg
     val width = 16
@@ -235,12 +235,11 @@ object TextQueries {
     // read this cache. The old shape re-scanned documents (and re-ran the
     // tokenCount/stopwordRatio tokenization) separately for the verdict,
     // the priors, and the label join.
-    val f = docs.select(col("doc_id"),
+    val f = scope.persist(docs.select(col("doc_id"),
         when(col("lang") === "en", lit(1.0)).otherwise(lit(0.0)).as("y"),
         least(TextAnalysis.tokenCount(col("text")).cast("double")
           / lit(100.0), lit(1.0)).as("x2"),
-        TextAnalysis.stopwordRatio(col("text")).as("x3"))
-      .persist()
+        TextAnalysis.stopwordRatio(col("text")).as("x3")))
     val wts = LogReg.trainOnFeatures(f, iters = 5)
     val lr = f.select(col("doc_id"),
       when((lit(wts(0)) + lit(wts(1)) * col("x2")
@@ -252,7 +251,7 @@ object TextQueries {
     // the NB tf relation is the one remaining tokenize scan: its exploded
     // shape cannot share the per-doc feature rows without caching
     // corpus-sized token arrays (the 100 TB rule)
-    val cnt = docs
+    val cnt = scope.persist(docs
       .select(col("doc_id"),
         explode(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')"))
           .as("w"))
@@ -260,8 +259,7 @@ object TextQueries {
         (conv(substring(md5(col("w")), 1, 12), 16, 10).cast("long")
           % width).as("bucket"))
       .groupBy("doc_id", "bucket")
-      .agg(count(lit(1)).as("cnt"))
-      .persist()
+      .agg(count(lit(1)).as("cnt")))
     val enDocs = f.select(col("doc_id"),
       when(col("y") === 1.0, 1L).otherwise(0L).as("y"))
     val model = cnt.join(enDocs, "doc_id")
@@ -286,11 +284,8 @@ object TextQueries {
       .select(col("doc_id"),
         when(col("s1raw") + prior1 > col("s0raw") + prior0, 1L)
           .otherwise(0L).as("b"))
-    val out = lr.join(nb, "doc_id").join(enDocs, "doc_id")
-      .localCheckpoint(true)
-    f.unpersist(false)
-    cnt.unpersist(false)
-    out
+    // the returned plan reads this checkpoint: it stays with the caller
+    lr.join(nb, "doc_id").join(enDocs, "doc_id").localCheckpoint(true)
   }
 
   private def lrOracleSql(iters: Int): String =
@@ -321,19 +316,15 @@ object TextQueries {
     // oracle's unrolled replay. The accuracy verdict is z > 0 (no
     // transcendental in the decision).
     "quality_lr_train" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         import graft.text.LogReg
-        val f = LogReg.features(t(s, d, "documents")).persist()
+        val f = scope.persist(LogReg.features(t(s, d, "documents")))
         val w = LogReg.trainOnFeatures(f, iters = 5)
-        val out = LogReg.accuracyAgg(f, w)
+        scope.result(LogReg.accuracyAgg(f, w)
           .select(lit(w(0)).as("w_bias"), lit(w(1)).as("w_len"),
             lit(w(2)).as("w_stop"), col("n_docs"), col("n_correct"),
             round(col("n_correct").cast("double") / col("n_docs"), 6)
-              .as("train_acc"))
-          .persist()
-        out.count() // materialize while the feature cache is live
-        f.unpersist(false)
-        out
+              .as("train_acc")))
       },
       oracle = Some(lrOracleSql(5))),
 
@@ -345,12 +336,12 @@ object TextQueries {
     // anywhere in the scored path); training replays through the same
     // shared CTE chain.
     "quality_lr_score" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         import graft.text.LogReg
         val docs = t(s, d, "documents")
-        val f = LogReg.features(docs).persist()
+        val f = scope.persist(LogReg.features(docs))
         val w = LogReg.trainOnFeatures(f, iters = 5)
-        val out = docs
+        scope.result(docs
           .where(col("lang") =!= "en")
           .select(col("doc_id"), col("lang"),
             round(lit(w(0)) +
@@ -358,11 +349,7 @@ object TextQueries {
                 .cast("double") / lit(100.0), lit(1.0)) +
               lit(w(2)) * TextAnalysis.stopwordRatio(col("text")), 6)
               .as("en_score"))
-          .orderBy(col("en_score").desc, col("doc_id")).limit(20)
-          .persist()
-        out.count() // materialize while the feature cache is live
-        f.unpersist(false)
-        out
+          .orderBy(col("en_score").desc, col("doc_id")).limit(20))
       },
       oracle = Some(s"""
         WITH ${lrRoundsCtes(5)},
@@ -431,7 +418,7 @@ object TextQueries {
     // by the model aggregation and the scoring join (one tokenize pass);
     // the model is 16 rows, priors are two pulled scalars.
     "quality_nb_score" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         import org.apache.spark.sql.expressions.Window
         val width = 16
         val dec = DecimalType(18, 6)
@@ -439,7 +426,7 @@ object TextQueries {
         val pr = docs.agg(count(lit(1)),
           sum(when(col("lang") === "en", 1L).otherwise(0L))).head()
         val (nd, nd1) = (pr.getLong(0), pr.getLong(1))
-        val cnt = docs
+        val cnt = scope.persist(docs
           .select(col("doc_id"),
             when(col("lang") === "en", 1L).otherwise(0L).as("y"),
             explode(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')"))
@@ -448,8 +435,7 @@ object TextQueries {
             (conv(substring(md5(col("w")), 1, 12), 16, 10).cast("long")
               % width).as("bucket"))
           .groupBy("doc_id", "y", "bucket")
-          .agg(count(lit(1)).as("cnt"))
-          .persist()
+          .agg(count(lit(1)).as("cnt")))
         val model = cnt.groupBy("bucket")
           .agg(sum(when(col("y") === 0L, col("cnt")).otherwise(0L)).as("c0"),
             sum(when(col("y") === 1L, col("cnt")).otherwise(0L)).as("c1"))
@@ -465,7 +451,7 @@ object TextQueries {
         val prior0 = round(log(lit((nd - nd1).toDouble / nd.toDouble)), 6)
           .cast(dec)
         val prior1 = round(log(lit(nd1.toDouble / nd.toDouble)), 6).cast(dec)
-        val out = cnt.join(model, "bucket")
+        scope.result(cnt.join(model, "bucket")
           .groupBy("doc_id", "y")
           .agg(sum(col("cnt") * col("lp0")).as("s0raw"),
             sum(col("cnt") * col("lp1")).as("s1raw"))
@@ -474,11 +460,7 @@ object TextQueries {
               .otherwise(0L).as("y_hat"))
           .groupBy("y", "y_hat").agg(count(lit(1)).as("n_docs"))
           .select(col("y").as("y_true"), col("y_hat"), col("n_docs"))
-          .orderBy("y_true", "y_hat")
-          .persist()
-        out.count() // materialize while the tf cache is live
-        cnt.unpersist(false)
-        out
+          .orderBy("y_true", "y_hat"))
       },
       oracle = Some("""
         WITH tok AS (
@@ -542,14 +524,14 @@ object TextQueries {
     // accumulates in DECIMAL; y-sums are exact integer-valued doubles;
     // per-bin closing divisions are scalar IEEE.
     "quality_reliability" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         import graft.text.LogReg
         val dec = DecimalType(18, 6)
-        val f = LogReg.features(t(s, d, "documents")).persist()
+        val f = scope.persist(LogReg.features(t(s, d, "documents")))
         val w = LogReg.trainOnFeatures(f, iters = 5)
         val z = lit(w(0)) + lit(w(1)) * col("x2") + lit(w(2)) * col("x3")
         val p = round(lit(1.0) / (lit(1.0) + exp(-z)), 6)
-        val out = f
+        scope.result(f
           .select(col("y"), p.as("p"),
             least(floor(p * 10), lit(9L)).cast("long").as("bin"))
           .groupBy("bin")
@@ -563,11 +545,7 @@ object TextQueries {
             (round(abs(col("ysum") / col("n_docs").cast("double")
               - col("psum").cast("double") / col("n_docs").cast("double")),
               6) + lit(0.0)).as("gap"))
-          .orderBy("bin")
-          .persist()
-        out.count() // materialize while the feature cache is live
-        f.unpersist(false)
-        out
+          .orderBy("bin"))
       },
       oracle = Some(s"""
         WITH ${lrRoundsCtes(5)},
@@ -1470,26 +1448,24 @@ object TextQueries {
     // DECIMAL(18,6) (order-independent), top-20 by rounded weight with
     // doc_id tie-break.
     "sample_dsir" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val B = 64
-        val toks = t(s, d, "documents")
+        val toks = scope.persist(t(s, d, "documents")
           .select(col("doc_id"), col("lang"),
             explode(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')"))
               .as("w"))
           .select(col("doc_id"), col("lang"),
             (conv(substring(md5(col("w")), 1, 12), 16, 10).cast("long")
-              % B).as("b"))
-          .persist()
+              % B).as("b")))
         val raw = toks.where(col("lang") =!= "en")
         // ONE aggregate pass over the cache derives all four count
         // relations the old shape computed in four separate jobs (ct, cs
         // and the two total-count scalars — guide §2.1): counts by
         // (bucket, is-target), 2B rows, checkpointed so the ratio join
         // and the scalar pulls read a leaf.
-        val cnts = toks
+        val cnts = scope.checkpoint(toks
           .groupBy(col("b"), (col("lang") === "en").as("tgt"))
-          .agg(count(lit(1)).as("c"))
-          .localCheckpoint(true)
+          .agg(count(lit(1)).as("c")))
         val ct = cnts.where(col("tgt")).select(col("b"), col("c").as("ctb"))
         val cs = cnts.where(!col("tgt")).select(col("b"), col("c").as("csb"))
         // a null lang groups as tgt = NULL and counts toward NEITHER
@@ -1508,18 +1484,13 @@ object TextQueries {
               ((coalesce(col("csb"), lit(0L)) + 1).cast("double")
                 / lit((ts + B).toDouble))), 6)
               .cast(DecimalType(18, 6)).as("term"))
-        val out = raw.join(ratios, "b")
+        scope.result(raw.join(ratios, "b")
           .groupBy("doc_id", "lang")
           .agg(count(lit(1)).as("n_toks"),
             sum(col("term")).as("lw"))
           .select(col("doc_id"), col("lang"), col("n_toks"),
             round(col("lw").cast("double"), 6).as("logw"))
-          .orderBy(col("logw").desc, col("doc_id")).limit(20)
-          .persist()
-        out.count() // materialize while the token cache is live
-        toks.unpersist(false)
-        graft.Blocks.releaseLocal(cnts)
-        out
+          .orderBy(col("logw").desc, col("doc_id")).limit(20))
       },
       oracle = Some("""
         WITH tb AS (
@@ -1626,19 +1597,14 @@ object TextQueries {
     // that one cache intentionally outlives the builder because the
     // returned plan reads it.
     "quality_gate" -> QueryDef(
-      fn = (s, d) => {
-        val scored = t(s, d, "documents").select(
-          col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality"))
-          .persist()
+      fn = (s, d) => graft.Blocks.scope { scope =>
+        val scored = scope.persist(t(s, d, "documents").select(
+          col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality")))
         val thr: Double = scored
           .agg((sum(col("quality").cast(DecimalType(18, 6))).cast("double") /
             count(lit(1))).as("t"))
           .head.getDouble(0)
-        val result = scored.where(col("quality") >= lit(thr)).orderBy("doc_id")
-          .persist()
-        result.count() // materialize while the scoring cache is live
-        scored.unpersist(false)
-        result
+        scope.result(scored.where(col("quality") >= lit(thr)).orderBy("doc_id"))
       },
       oracle = Some(s"""
         WITH scored AS (
@@ -2150,12 +2116,11 @@ object TextQueries {
       // scan, one bin-bounded aggregate, a window for the bin count —
       // per-bin terms (which are ≥ 0 by construction) round to 6dp into
       // DECIMAL, so the index is an exact sum.
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val dec = DecimalType(18, 6)
-        val scored = t(s, d, "documents")
+        val scored = scope.persist(t(s, d, "documents")
           .select(round(TextAnalysis.qualityScore(col("text")), 1).as("bin"),
-            (col("doc_id") % 2).as("side"))
-          .persist()
+            (col("doc_id") % 2).as("side")))
         val tot = scored.groupBy("side").count()
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         val (nA, nB) = (tot.getOrElse(0L, 0L), tot.getOrElse(1L, 0L))
@@ -2167,17 +2132,13 @@ object TextQueries {
               org.apache.spark.sql.expressions.Window.partitionBy()))
         val p = (col("a") + 1).cast("double") / (lit(nA) + col("k")).cast("double")
         val q = (col("b") + 1).cast("double") / (lit(nB) + col("k")).cast("double")
-        val out = counts
+        scope.result(counts
           .select(col("k"),
             round((p - q) * log(p / q), 6).cast(dec).as("term"))
           .groupBy("k").agg(sum(col("term")).as("psum"))
           .select(lit(nA).as("n_a"), lit(nB).as("n_b"),
             col("k").as("n_bins"),
-            col("psum").cast("double").as("psi"))
-          .persist()
-        out.count() // materialize while the scored cache is live
-        scored.unpersist(false)
-        out
+            col("psum").cast("double").as("psi")))
       },
       oracle = Some(s"""
         WITH sc AS (
@@ -2213,11 +2174,10 @@ object TextQueries {
         FROM tm GROUP BY k""")),
 
     "quality_ks_drift" -> QueryDef(
-      fn = (s, d) => {
-        val scored = t(s, d, "documents")
+      fn = (s, d) => graft.Blocks.scope { scope =>
+        val scored = scope.persist(t(s, d, "documents")
           .select(round(TextAnalysis.qualityScore(col("text")), 3).as("bin"),
-            (col("doc_id") % 2).as("side"))
-          .persist()
+            (col("doc_id") % 2).as("side")))
         val tot = scored.groupBy("side").count()
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         val (nA, nB) = (tot.getOrElse(0L, 0L), tot.getOrElse(1L, 0L))
@@ -2233,10 +2193,7 @@ object TextQueries {
             col("ca").cast("double") / lit(nA.toDouble) -
               col("cb").cast("double") / lit(nB.toDouble))), 6).as("ks_stat"))
           .select(lit(nA).as("n_a"), lit(nB).as("n_b"), col("ks_stat"))
-        val out = ks.persist()
-        out.count() // materialize while the scored cache is live
-        scored.unpersist(false)
-        out
+        scope.result(ks)
       },
       oracle = Some(s"""
         WITH sc AS (
@@ -2326,7 +2283,7 @@ object TextQueries {
     // no global vocabulary sort; the total-mass denominator is one
     // driver-pulled scalar.
     "corpus_vocab_coverage" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val ladder = Seq(10, 50, 100, 500, 1000)
         val toks = t(s, d, "documents").select(
           explode(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')"))
@@ -2337,10 +2294,9 @@ object TextQueries {
           .withColumn("rnk",
             row_number().over(Window.orderBy(col("c").desc, col("w")))
               .cast("long"))
-        val cum = head.withColumn("cum",
+        val cum = scope.persist(head.withColumn("cum",
           sum(col("c")).over(Window.orderBy("rnk")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .persist()
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
         // a ladder step past the actual vocabulary saturates at the last
         // rank (full head mass) instead of silently dropping its row
         val maxRnk: Long = cum.agg(max(col("rnk"))).head.getLong(0)
@@ -2350,10 +2306,7 @@ object TextQueries {
               col("cum").as("covered_tokens"),
               round(col("cum").cast("double") / lit(total.toDouble), 6)
                 .as("coverage")))
-        val out = steps.reduce(_ unionByName _).orderBy("n_vocab").persist()
-        out.count() // materialize while the cum cache is live
-        cum.unpersist(false)
-        out
+        scope.result(steps.reduce(_ unionByName _).orderBy("n_vocab"))
       },
       oracle = Some("""
         WITH tok AS (
@@ -2393,7 +2346,7 @@ object TextQueries {
     // one-row cross join. Floor c_ab >= 5 kills the low-count PMI
     // explosion; identical division order both engines.
     "corpus_pmi" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         // ONE corpus scan (guide §2.1 one-pass aggregation; the r15 fix
         // for r14's two-scan regression): unigrams and windowed pairs
         // derive from a single tagged explode — a struct(a, b) row with
@@ -2414,7 +2367,7 @@ object TextQueries {
         // kinds cannot collide and the pair decodes unambiguously. A single
         // string key also hashes/compares cheaper in the aggregate than a
         // two-string struct.
-        val counts = toksDf.select(explode(expr("""
+        val counts = scope.checkpoint(toksDf.select(explode(expr("""
             concat(
               toks,
               flatten(
@@ -2424,8 +2377,7 @@ object TextQueries {
                       least(element_at(toks, i), element_at(toks, j)), ' ',
                       greatest(element_at(toks, i), element_at(toks, j)))))))
           """)).as("k"))
-          .groupBy("k").agg(count(lit(1)).as("c"))
-          .localCheckpoint(true)
+          .groupBy("k").agg(count(lit(1)).as("c")))
         val isPair = col("k").contains(" ")
         val uni = counts.where(!isPair)
           .select(col("k").as("w"), col("c").as("cw"))
@@ -2435,7 +2387,7 @@ object TextQueries {
             col("c").as("c_ab"))
         val p: Long = pairCounts.agg(sum("c_ab")).head.getLong(0)
         val n: Long = uni.agg(sum("cw")).head.getLong(0)
-        val out = pairCounts
+        scope.result(pairCounts
           .where(col("c_ab") >= 5)
           .join(uni.select(col("w").as("a"), col("cw").as("ca")), "a")
           .join(uni.select(col("w").as("b"), col("cw").as("cb")), "b")
@@ -2444,13 +2396,7 @@ object TextQueries {
               ((col("ca").cast("double") / lit(n.toDouble)) *
                 (col("cb").cast("double") / lit(n.toDouble)))), 6).as("pmi"))
           .orderBy(col("pmi").desc, col("a"), col("b"))
-          .limit(20)
-          .persist()
-        out.count() // materialize the top-20 card eagerly
-        // the count table's consumers are all materialized into `out`:
-        // release its checkpoint deterministically (graft.Blocks doc)
-        graft.Blocks.releaseLocal(counts)
-        out
+          .limit(20))
       },
       oracle = Some("""
         WITH tk AS (
@@ -2660,14 +2606,13 @@ object TextQueries {
     // saturate (repeat the full-corpus point). Driver-side ln rounds
     // HALF_UP to 6dp, matching the oracle's round(ln(int), 6).
     "corpus_heaps_curve" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         import s.implicits._
         val ks = Seq(32, 64, 128, 256, 512, 1024, 2048, 4096)
-        val toks = t(s, d, "documents")
+        val toks = scope.persist(t(s, d, "documents")
           .select(col("doc_id"),
             explode(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')"))
-              .as("w"))
-          .persist()
+              .as("w")))
         val nAggs = ks.map(k =>
           sum(when(col("doc_id") < k, col("nt")).otherwise(0L)))
         val nRow = toks.groupBy("doc_id").agg(count(lit(1)).as("nt"))
@@ -2675,7 +2620,6 @@ object TextQueries {
         val vAggs = ks.map(k => sum(when(col("fd") < k, 1L).otherwise(0L)))
         val vRow = toks.groupBy("w").agg(min(col("doc_id")).as("fd"))
           .agg(vAggs.head, vAggs.tail: _*).head()
-        toks.unpersist(false)
         def r6(x: Double): Double =
           BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         val rows = ks.indices.flatMap { i =>
@@ -2758,7 +2702,7 @@ object TextQueries {
     "bpe_train" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val (merges, _) = graft.text.Bpe.train(t(s, d, "documents"), numMerges = 8)
+        val merges = graft.text.Bpe.train(t(s, d, "documents"), numMerges = 8)
         merges.map(m => (m.step.toLong, m.a, m.b, m.cnt))
           .toDF("step", "a", "b", "cnt")
           .orderBy("step")
@@ -2781,11 +2725,11 @@ object TextQueries {
     // so the learned merges and their application cannot drift between
     // the two entries.
     "bpe_encode" -> QueryDef(
-      fn = (s, d) => {
-        val wv = graft.text.Bpe.wordVocab(t(s, d, "documents")).persist()
-        val (merges, _) = graft.text.Bpe.trainFromVocab(wv, numMerges = 8)
+      fn = (s, d) => graft.Blocks.scope { scope =>
+        val wv = scope.persist(graft.text.Bpe.wordVocab(t(s, d, "documents")))
+        val merges = graft.text.Bpe.trainFromVocab(wv, numMerges = 8)
         val segK = graft.text.Bpe.applyMerges(graft.text.Bpe.charSplit(wv), merges)
-        val out = segK
+        scope.result(segK
           .select(col("f"), size(col("toks")).cast("long").as("n_sub"),
             length(col("word")).cast("long").as("n_chars"))
           .agg(sum(col("f")).as("n_words"),
@@ -2795,11 +2739,7 @@ object TextQueries {
             round(col("n_subtokens").cast("double") / col("n_words"), 6)
               .as("fertility"),
             round(col("n_chars_total").cast("double") / col("n_subtokens"), 6)
-              .as("chars_per_token"))
-          .persist()
-        out.count() // materialize while the vocab cache is live
-        wv.unpersist(false)
-        out
+              .as("chars_per_token")))
       },
       oracle = Some(s"""
         WITH ${bpeRoundsCtes(8)},
@@ -3074,7 +3014,7 @@ object TextQueries {
     // N and V are two pulled scalars. Per-position ln rounds to 6dp into
     // DECIMAL; every branch is an integer ratio times exact literals.
     "text_backoff_logprob" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val docs = t(s, d, "documents")
         // n-grams derive SCAN-SIDE (array transform + explode, no window —
         // r14 removed the persisted posexplode + three doc-partitioned
@@ -3092,7 +3032,7 @@ object TextQueries {
         // vocab^n-bounded and checkpointed; the three count relations and
         // the N/V scalars all read that leaf. The old shape ran THREE
         // separate tokenize scans (tri/bi/uni) over the training half.
-        val trainCnts = docs.where(even)
+        val trainCnts = scope.checkpoint(docs.where(even)
           .select(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')")
             .as("tk"))
           .select(explode(expr(
@@ -3106,8 +3046,7 @@ object TextQueries {
                           i -> concat(tk[i], ' ', tk[i + 1], ' ', tk[i + 2]))
                    else slice(tk, 1, 0) end)""")).as("k"))
           .groupBy("k").agg(count(lit(1)).as("c"))
-          .withColumn("nw", size(split(col("k"), " ")))
-          .localCheckpoint(true)
+          .withColumn("nw", size(split(col("k"), " "))))
         val triCnt = trainCnts.where(col("nw") === 3)
           .select(substring_index(col("k"), " ", 1).as("w1"),
             substring_index(substring_index(col("k"), " ", 2), " ", -1)
@@ -3131,7 +3070,7 @@ object TextQueries {
           .otherwise(log(lit(0.4) * (lit(0.4) *
             ((coalesce(col("c3"), lit(0L)) + 1).cast("double")
               / lit(floorDen)))))
-        val out = wordNgrams(docs, 3, col("doc_id") % 2 === 1)
+        scope.result(wordNgrams(docs, 3, col("doc_id") % 2 === 1)
           .join(triCnt, Seq("w1", "w2", "w3"), "left")
           .join(bigCnt.select(col("wa").as("w1"), col("wb").as("w2"),
             col("cab").as("c12")), Seq("w1", "w2"), "left")
@@ -3147,11 +3086,7 @@ object TextQueries {
           .agg(count(lit(1)).as("n_trigrams"),
             round(sum(col("lp")).cast("double") / count(lit(1)), 6)
               .as("avg_logprob"))
-          .orderBy("doc_id")
-          .persist()
-        out.count() // materialize the per-doc card eagerly
-        graft.Blocks.releaseLocal(trainCnts)
-        out
+          .orderBy("doc_id"))
       },
       oracle = Some("""
         WITH tl AS (
@@ -3230,7 +3165,7 @@ object TextQueries {
     // stream left-joins three bounded count relations (AQE's choice) —
     // the same join plan at 100 TB.
     "text_kneser_ney_logprob" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val docs = t(s, d, "documents")
         // ONE tagged tokenize scan over the training half (guide §2.1,
         // the corpus_pmi one-scan pattern; r15): a key with no space is
@@ -3243,7 +3178,7 @@ object TextQueries {
         // The old shape checkpointed the CORPUS-SIZED bigram stream and
         // ran a countDistinct + two distinct()s over it, plus a second
         // tokenize scan for V.
-        val counts = docs.where(col("doc_id") % 2 === 0)
+        val counts = scope.checkpoint(docs.where(col("doc_id") % 2 === 0)
           .select(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')")
             .as("tk"))
           .select(explode(expr(
@@ -3252,8 +3187,7 @@ object TextQueries {
                    then transform(sequence(0, size(tk) - 2),
                           i -> concat(tk[i], ' ', tk[i + 1]))
                    else slice(tk, 1, 0) end)""")).as("k"))
-          .groupBy("k").agg(count(lit(1)).as("c"))
-          .localCheckpoint(true)
+          .groupBy("k").agg(count(lit(1)).as("c")))
         val isPair = col("k").contains(" ")
         val bcnt = counts.where(isPair)
           .select(substring_index(col("k"), " ", 1).as("w1"),
@@ -3274,7 +3208,7 @@ object TextQueries {
             (greatest(lit(0L), lit(4L) * coalesce(col("c12"), lit(0L)) - 3)
               * lit(sS) + lit(3L) * col("n1v") * n1wS).cast("double")
               / (lit(4L) * col("c1") * lit(sS)).cast("double")))
-        val out = wordNgrams(docs, 2, col("doc_id") % 2 === 1)
+        scope.result(wordNgrams(docs, 2, col("doc_id") % 2 === 1)
           .join(bcnt, Seq("w1", "w2"), "left")
           .join(ctx, Seq("w1"), "left")
           .join(cont, Seq("w2"), "left")
@@ -3284,11 +3218,7 @@ object TextQueries {
           .agg(count(lit(1)).as("n_bigrams"),
             round(sum(col("lp")).cast("double") / count(lit(1)), 6)
               .as("avg_logprob"))
-          .orderBy("doc_id")
-          .persist()
-        out.count() // materialize the per-doc card eagerly
-        graft.Blocks.releaseLocal(counts)
-        out
+          .orderBy("doc_id"))
       },
       oracle = Some("""
         WITH tl AS (
@@ -3350,7 +3280,7 @@ object TextQueries {
     // operands. One tokenize explode, two vocab-bounded aggregates, a
     // vocab-sized full-outer join — no corpus-sized shuffle.
     "corpus_js_divergence" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val dec = DecimalType(18, 6)
         val toks = t(s, d, "documents").select(col("doc_id"),
           explode(expr("filter(split(lower(text), '\\\\s+'), x -> x != '')"))
@@ -3359,10 +3289,9 @@ object TextQueries {
           .groupBy("w").agg(count(lit(1)).as("cp"))
         val cq = toks.where(col("doc_id") % 2 === 1)
           .groupBy("w").agg(count(lit(1)).as("cq"))
-        val j = cp.join(cq, Seq("w"), "full_outer")
+        val j = scope.persist(cp.join(cq, Seq("w"), "full_outer")
           .select(coalesce(col("cp"), lit(0L)).as("cp"),
-            coalesce(col("cq"), lit(0L)).as("cq"))
-          .persist()
+            coalesce(col("cq"), lit(0L)).as("cq")))
         val st = j.agg(sum(col("cp")), sum(col("cq")),
           sum(when(col("cp") > 0, 1L).otherwise(0L)),
           sum(when(col("cq") > 0, 1L).otherwise(0L))).head()
@@ -3379,15 +3308,11 @@ object TextQueries {
             * log((lit(2L) * col("cq") * lit(np)).cast("double")
               / (col("cp") * lit(nq) + col("cq") * lit(np)).cast("double")),
             6).cast(dec)).otherwise(zero))
-        val out = j.agg(t1.as("t1"), t2.as("t2"))
+        scope.result(j.agg(t1.as("t1"), t2.as("t2"))
           .select(lit(va).as("vocab_a"), lit(vb).as("vocab_b"),
             (round(col("t1").cast("double") / lit(2.0 * np)
               + col("t2").cast("double") / lit(2.0 * nq), 6) + lit(0.0))
-              .as("js_nats"))
-          .persist()
-        out.count() // materialize while the joint-count cache is live
-        j.unpersist(false)
-        out
+              .as("js_nats")))
       },
       oracle = Some("""
         WITH tok AS (
@@ -3442,27 +3367,22 @@ object TextQueries {
     // an ulp under zero on independent mixtures → the +0.0 guard after
     // the round, the −0.0 rule the engine uses everywhere.
     "corpus_lang_source_mi" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         val dec = DecimalType(18, 6)
-        val joint = t(s, d, "documents")
-          .groupBy("lang", "source").agg(count(lit(1)).as("nls"))
-          .persist()
+        val joint = scope.persist(t(s, d, "documents")
+          .groupBy("lang", "source").agg(count(lit(1)).as("nls")))
         val nTot = joint.agg(sum(col("nls"))).head.getLong(0)
         val nl = joint.groupBy("lang").agg(sum(col("nls")).as("nl"))
         val ns = joint.groupBy("source").agg(sum(col("nls")).as("ns"))
         val logv = log((col("nls") * lit(nTot)).cast("double")
           / (col("nl") * col("ns")).cast("double"))
-        val out = joint.join(nl, "lang").join(ns, "source")
+        scope.result(joint.join(nl, "lang").join(ns, "source")
           .select(round(col("nls").cast("double") * logv, 6).cast(dec)
             .as("term"))
           .agg(sum(col("term")).as("tsum"))
           .select(lit(nTot).as("n_docs"),
             (round(col("tsum").cast("double") / lit(nTot.toDouble), 6)
-              + lit(0.0)).as("mi_nats"))
-          .persist()
-        out.count() // materialize while the joint cache is live
-        joint.unpersist(false)
-        out
+              + lit(0.0)).as("mi_nats")))
       },
       oracle = Some("""
         WITH joint AS (

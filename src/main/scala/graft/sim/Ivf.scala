@@ -61,41 +61,39 @@ object Ivf {
 
   private def trainCentroidsImpl(
       emb: DataFrame, k: Int, iters: Int,
-      idCol: String, embCol: String): Array[Array[Double]] = {
-    val v = emb.select(col(idCol).as("id"), col(embCol).cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      v.count() // materialize the cache before the training jobs
-      // Hash-rank seed sampling: the k vectors with the smallest md5(id) —
-      // deterministic, density-free (sparse or hashed ids work the same),
-      // and pseudo-randomly spread over the corpus. orderBy+limit plans as
-      // a per-partition top-k merge (TakeOrderedAndProject), not a global
-      // sort, so nothing bottlenecks at scale.
-      var centroids: Array[Array[Double]] = v
-        .orderBy(md5(col("id").cast("string")), col("id")).limit(k)
-        .select("v").collect().map(_.getSeq[Double](0).toArray)
-      require(centroids.length == k,
-        s"ivf init: got ${centroids.length} seeds for k=$k (corpus smaller than k?)")
+      idCol: String, embCol: String): Array[Array[Double]] = graft.Blocks.scope { s =>
+    val v = s.persist(
+      emb.select(col(idCol).as("id"), col(embCol).cast("array<double>").as("v")))
+    v.count() // materialize the cache before the training jobs
+    // Hash-rank seed sampling: the k vectors with the smallest md5(id) —
+    // deterministic, density-free (sparse or hashed ids work the same),
+    // and pseudo-randomly spread over the corpus. orderBy+limit plans as
+    // a per-partition top-k merge (TakeOrderedAndProject), not a global
+    // sort, so nothing bottlenecks at scale.
+    var centroids: Array[Array[Double]] = v
+      .orderBy(md5(col("id").cast("string")), col("id")).limit(k)
+      .select("v").collect().map(_.getSeq[Double](0).toArray)
+    require(centroids.length == k,
+      s"ivf init: got ${centroids.length} seeds for k=$k (corpus smaller than k?)")
 
-      val dim = centroids(0).length
-      for (_ <- 1 to iters) {
-        // One avg per coordinate, grouped by the assignment — NO explode:
-        // an exploded formulation invites Catalyst to collapse the cell
-        // argmax above the Generate and recompute it per coordinate (64x;
-        // measured 4.5 s/round on 5k vectors vs ~0.3 s for this shape).
-        // The k x dim result is identical: round(avg(v[i]), MeanScale).
-        val means: Map[Int, Array[Double]] = v
-          .groupBy(cellCol(col("v"), centroids).as("cell"))
-          .agg(round(avg(element_at(col("v"), 1)), MeanScale).as("m0"),
-            (1 until dim).map(i =>
-              round(avg(element_at(col("v"), i + 1)), MeanScale).as(s"m$i")): _*)
-          .collect()
-          .map(r => r.getInt(0) -> (1 to dim).map(r.getDouble).toArray)
-          .toMap
-        centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i))).toArray
-      }
-      centroids
-    } finally v.unpersist(false)
+    val dim = centroids(0).length
+    for (_ <- 1 to iters) {
+      // One avg per coordinate, grouped by the assignment — NO explode:
+      // an exploded formulation invites Catalyst to collapse the cell
+      // argmax above the Generate and recompute it per coordinate (64x;
+      // measured 4.5 s/round on 5k vectors vs ~0.3 s for this shape).
+      // The k x dim result is identical: round(avg(v[i]), MeanScale).
+      val means: Map[Int, Array[Double]] = v
+        .groupBy(cellCol(col("v"), centroids).as("cell"))
+        .agg(round(avg(element_at(col("v"), 1)), MeanScale).as("m0"),
+          (1 until dim).map(i =>
+            round(avg(element_at(col("v"), i + 1)), MeanScale).as(s"m$i")): _*)
+        .collect()
+        .map(r => r.getInt(0) -> (1 to dim).map(r.getDouble).toArray)
+        .toMap
+      centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i))).toArray
+    }
+    centroids
   }
 
   /** SemDeDup (Abbas et al., arXiv:2303.09540) candidate machinery:
@@ -114,8 +112,7 @@ object Ivf {
     * volume — constant; ScaleSmoke.semanticSection pins the linearity). */
   def semanticPairs(
       emb: DataFrame, numCells: Int, iters: Int,
-      threshold: Double): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+      threshold: Double): DataFrame = graft.Blocks.scope { s =>
     val centroids = trainCentroids(emb, numCells, iters)
     // Per-VECTOR work is hoisted out of the per-PAIR loop (guide §1.2):
     // the cached index carries the double-cast vector and its norm
@@ -126,23 +123,19 @@ object Ivf {
     // whether computed per pair or once per vector, and the divide sees
     // the identical operands — the oracle replays the per-pair formula
     // and hashes agree.
-    val idx = index(emb, centroids)
+    val idx = s.persist(index(emb, centroids)
       .select(col("c_id"), col("cell"),
         col("c_emb").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(VectorOps.dot(col("v"), col("v"))))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("nrm", sqrt(VectorOps.dot(col("v"), col("v")))))
     idx.count()
-    val pairs = idx.as("a").join(idx.as("b"),
+    // materialized while the cell index is cached
+    s.result(idx.as("a").join(idx.as("b"),
         col("a.cell") === col("b.cell") && col("a.c_id") < col("b.c_id"))
       .select(col("a.cell").cast("long").as("cell"),
         col("a.c_id").as("id_a"), col("b.c_id").as("id_b"),
         round(VectorOps.dot(col("a.v"), col("b.v"))
           / (col("a.nrm") * col("b.nrm")), 6).as("score"))
-      .where(col("score") >= lit(threshold))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // materialize while the cell index is cached
-    idx.unpersist(false)
-    pairs
+      .where(col("score") >= lit(threshold)))
   }
 
   /** Corpus indexed by cell. At scale: persist partitioned/bucketed by
@@ -256,8 +249,7 @@ object Ivf {
     * Returns (nprobe, n_queries, hits, recall) per swept point. */
   def recallSweep(
       corpus: DataFrame, queries: DataFrame, k: Int, nprobes: Seq[Int],
-      numCells: Int = 16, iters: Int = 5): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+      numCells: Int = 16, iters: Int = 5): DataFrame = graft.Blocks.scope { s =>
     require(nprobes.nonEmpty && nprobes.forall(_ >= 1), s"bad nprobes $nprobes")
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -282,20 +274,18 @@ object Ivf {
         posexplode(slice(col("ranked"), 1, maxP)))
       .select(col("q_id"), col("q_emb"),
         (col("pos") + 1).cast("long").as("prn"), col("col.c").as("probe"))
-    val cand = idx
+    val cand = s.persist(idx
       .join(probes, col("cell") === col("probe") && col("c_id") =!= col("q_id"))
       .select(col("q_id"), col("c_id"), col("prn"),
-        VectorOps.cosineRounded(col("c_emb"), col("q_emb")).as("score"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        VectorOps.cosineRounded(col("c_emb"), col("q_emb")).as("score")))
     val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("c_id"))
-    val bf = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
+    val bf = s.persist(corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
       .join(broadcast(q), col("c_id") =!= col("q_id"))
       .select(col("q_id"), col("c_id"),
         VectorOps.cosineRounded(col("c_emb"), col("q_emb")).as("score"))
       .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= k)
-      .select("q_id", "c_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select("q_id", "c_id"))
     val rows = nprobes.sorted.map { np =>
       val ivfK = cand.where(col("prn") <= np)
         .withColumn("rnk", row_number().over(w))
@@ -306,8 +296,6 @@ object Ivf {
         BigDecimal(hits.toDouble / (k * nq))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }
-    cand.unpersist(false)
-    bf.unpersist(false)
     rows.toDF("nprobe", "n_queries", "hits", "recall").orderBy("nprobe")
   }
 

@@ -47,9 +47,9 @@ object KCenter {
       idCol: String = "vec_id", embCol: String = "embedding")
       : (Seq[Center], Seq[Array[Double]]) = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val v = emb.select(col(idCol).as("id"),
-      col(embCol).cast("array<double>").as("v")).persist()
-    try {
+    graft.Blocks.scope { s =>
+      val v = s.persist(emb.select(col(idCol).as("id"),
+        col(embCol).cast("array<double>").as("v")))
       val seedRows = v.orderBy(col("id")).limit(1).collect()
       require(seedRows.nonEmpty,
         s"k-center selection needs a non-empty relation ($idCol/$embCol)")
@@ -75,7 +75,7 @@ object KCenter {
         }
       }
       (centers, centerVecs)
-    } finally v.unpersist()
+    }
   }
 
   /** Coverage report for the k selected centers: every point's rounded

@@ -3,7 +3,6 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorOps
 
@@ -69,52 +68,50 @@ object Pq {
 
   private def trainCodebooksImpl(
       emb: DataFrame, k: Int, iters: Int,
-      idCol: String, embCol: String): Array[Array[Array[Double]]] = {
-    val v = emb.select(col(idCol).as("id"), col(embCol).cast("array<double>").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      v.count() // materialize the cache before the training jobs
-      // Hash-rank seed sampling (see Ivf.trainCentroids): density-free and
-      // deterministic — the k vectors with the smallest md5(id).
-      val seeds: Array[Array[Double]] = v
-        .orderBy(md5(col("id").cast("string")), col("id")).limit(k)
-        .select("v").collect().map(_.getSeq[Double](0).toArray)
-      require(seeds.length == k,
-        s"pq init: got ${seeds.length} seeds for k=$k (corpus smaller than k?)")
-      var books: Array[Array[Array[Double]]] =
-        Array.tabulate(NumSubspaces)(m =>
-          seeds.map(_.slice(m * SubDim, (m + 1) * SubDim)))
+      idCol: String, embCol: String): Array[Array[Array[Double]]] = graft.Blocks.scope { s =>
+    val v = s.persist(
+      emb.select(col(idCol).as("id"), col(embCol).cast("array<double>").as("v")))
+    v.count() // materialize the cache before the training jobs
+    // Hash-rank seed sampling (see Ivf.trainCentroids): density-free and
+    // deterministic — the k vectors with the smallest md5(id).
+    val seeds: Array[Array[Double]] = v
+      .orderBy(md5(col("id").cast("string")), col("id")).limit(k)
+      .select("v").collect().map(_.getSeq[Double](0).toArray)
+    require(seeds.length == k,
+      s"pq init: got ${seeds.length} seeds for k=$k (corpus smaller than k?)")
+    var books: Array[Array[Array[Double]]] =
+      Array.tabulate(NumSubspaces)(m =>
+        seeds.map(_.slice(m * SubDim, (m + 1) * SubDim)))
 
-      for (_ <- 1 to iters) {
-        // Explode ONE struct per subspace (8/row, argmax evaluated inside
-        // the generator so it runs exactly once per row — a per-coordinate
-        // explode invites Catalyst to collapse the assignment above the
-        // Generate and recompute all 64 dots per coordinate; measured
-        // 4.5 s/round on 5k vectors vs ~0.3 s for this shape), then one
-        // avg per sub-coordinate. Values are identical:
-        // round(avg(sub[j]), MeanScale).
-        val subs = array((0 until NumSubspaces).map { m =>
-          struct(lit(m).as("m"),
-            Ivf.cellCol(subVector(col("v"), m), books(m)).as("cell"),
-            subVector(col("v"), m).as("sub"))
-        }: _*)
-        val means = v
-          .select(explode(subs).as("s"))
-          .select(col("s.m").as("m"), col("s.cell").as("cell"), col("s.sub").as("sub"))
-          .groupBy("m", "cell")
-          .agg(round(avg(element_at(col("sub"), 1)), Ivf.MeanScale).as("p0"),
-            (1 until SubDim).map(j =>
-              round(avg(element_at(col("sub"), j + 1)), Ivf.MeanScale).as(s"p$j")): _*)
-          .collect()
-        val byCell: Map[(Int, Int), Array[Double]] = means
-          .map(r => (r.getInt(0), r.getInt(1)) ->
-            (2 until 2 + SubDim).map(r.getDouble).toArray)
-          .toMap
-        books = Array.tabulate(NumSubspaces)(m =>
-          books(m).indices.map(c => byCell.getOrElse((m, c), books(m)(c))).toArray)
-      }
-      books
-    } finally v.unpersist(false)
+    for (_ <- 1 to iters) {
+      // Explode ONE struct per subspace (8/row, argmax evaluated inside
+      // the generator so it runs exactly once per row — a per-coordinate
+      // explode invites Catalyst to collapse the assignment above the
+      // Generate and recompute all 64 dots per coordinate; measured
+      // 4.5 s/round on 5k vectors vs ~0.3 s for this shape), then one
+      // avg per sub-coordinate. Values are identical:
+      // round(avg(sub[j]), MeanScale).
+      val subs = array((0 until NumSubspaces).map { m =>
+        struct(lit(m).as("m"),
+          Ivf.cellCol(subVector(col("v"), m), books(m)).as("cell"),
+          subVector(col("v"), m).as("sub"))
+      }: _*)
+      val means = v
+        .select(explode(subs).as("s"))
+        .select(col("s.m").as("m"), col("s.cell").as("cell"), col("s.sub").as("sub"))
+        .groupBy("m", "cell")
+        .agg(round(avg(element_at(col("sub"), 1)), Ivf.MeanScale).as("p0"),
+          (1 until SubDim).map(j =>
+            round(avg(element_at(col("sub"), j + 1)), Ivf.MeanScale).as(s"p$j")): _*)
+        .collect()
+      val byCell: Map[(Int, Int), Array[Double]] = means
+        .map(r => (r.getInt(0), r.getInt(1)) ->
+          (2 until 2 + SubDim).map(r.getDouble).toArray)
+        .toMap
+      books = Array.tabulate(NumSubspaces)(m =>
+        books(m).indices.map(c => byCell.getOrElse((m, c), books(m)(c))).toArray)
+    }
+    books
   }
 
   /** Corpus encoded as one small int per subspace: a scan-side projection

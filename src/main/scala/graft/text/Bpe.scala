@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * independent of corpus bytes. Per merge: one groupBy over vocab-adjacent
   * pairs, a 1-row driver pull for the argmax (the same scalar-pull class
   * as watermark discovery), and a narrow map re-tokenizing the vocab;
-  * vocab lineage is truncated per merge (`localCheckpoint`) so the plan
-  * stays constant-size across iterations.
+  * vocab lineage is truncated every few merges (`localCheckpoint`) so the
+  * plan stays bounded across iterations.
   *
   * Determinism: counts are exact integers and the argmax tie-break is
   * lexicographic on (a, b), so the learned merge table is reproducible
@@ -79,63 +79,51 @@ object Bpe {
     merges.foldLeft(vocab)((v, m) =>
       v.withColumn("toks", applyMergeExpr(m.a, m.b)))
 
-  /** Learn `numMerges` BPE merges from the corpus. Returns the ordered
-    * merge table and the final merged vocab (toks, f) — the state a
-    * tokenizer build persists. Stops early if no pair remains (every word
-    * a single symbol). */
-  def train(
-      docs: DataFrame, numMerges: Int, textCol: String = "text"): (Seq[Merge], DataFrame) =
+  /** Learn `numMerges` BPE merges from the corpus: the ordered merge
+    * table. Stops early if no pair remains (every word a single symbol). */
+  def train(docs: DataFrame, numMerges: Int, textCol: String = "text"): Seq[Merge] =
     trainFromVocab(wordVocab(docs, textCol), numMerges)
 
   /** [[train]] from an already-built (word, f) vocab — callers that also
     * encode (or otherwise reuse the vocab) persist it and pay the corpus
     * scan once across both phases.
     *
-    * `ckptEvery`: vocab-lineage truncation cadence (r15, interleave-
-    * A/B'd). Each skipped truncation trades one vocab-sized
-    * materialization JOB for re-evaluating ≤ ckptEvery fold-merge layers
-    * inline in the next round's pair aggregate — vocab-sized narrow maps,
-    * far cheaper than a job round-trip at any scale. The plan stays
-    * ≤ ckptEvery merge layers deep (bounded, not iteration-count-
-    * dependent) and the learned merges are bit-identical (the argmax
-    * inputs are the same exact integer counts). */
-  def trainFromVocab(
-      wv: DataFrame, numMerges: Int, ckptEvery: Int = 2): (Seq[Merge], DataFrame) = {
+    * Vocab lineage is truncated every [[graft.operators.Graph.PrCkptRounds]]
+    * merges (r15, interleave-A/B'd): each skipped truncation trades one
+    * vocab-sized materialization JOB for re-evaluating that many fold-merge
+    * layers inline in the next round's pair aggregate — vocab-sized narrow
+    * maps, far cheaper than a job round-trip at any scale. The plan stays
+    * bounded (not iteration-count-dependent) and the learned merges are
+    * bit-identical (the argmax inputs are the same exact integer counts).
+    * The vocab after the last merge is never read, so it is never
+    * materialized; every checkpoint is released when training returns. */
+  def trainFromVocab(wv: DataFrame, numMerges: Int): Seq[Merge] = {
     require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
-    require(ckptEvery >= 1, s"ckptEvery must be >= 1, got $ckptEvery")
-    var vocab = charSplit(wv).select(col("toks"), col("f")).localCheckpoint(true)
-    var lastCkpt = vocab
-    var sinceCkpt = 0
-    val merges = Seq.newBuilder[Merge]
-    var step = 1
-    var exhausted = false
-    while (step <= numMerges && !exhausted) {
-      val top = pairCounts(vocab)
-        .orderBy(desc("cnt"), asc("a"), asc("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val r = top.head
-        val (a, b, cnt) = (r.getString(0), r.getString(1), r.getLong(2))
-        merges += Merge(step, a, b, cnt)
-        vocab = vocab.select(applyMergeExpr(a, b).as("toks"), col("f"))
-        sinceCkpt += 1
-        if (sinceCkpt >= ckptEvery || step == numMerges) {
-          vocab = vocab.localCheckpoint(true)
-          // the superseded checkpoint is dead once the new one is
-          // materialized — release it now, not at the next GC
-          graft.Blocks.releaseLocal(lastCkpt)
-          lastCkpt = vocab
-          sinceCkpt = 0
+    graft.Blocks.scope { s =>
+      var vocab = s.checkpoint(charSplit(wv).select(col("toks"), col("f")))
+      var lastCkpt = vocab
+      val merges = Seq.newBuilder[Merge]
+      var step = 1
+      var exhausted = false
+      while (step <= numMerges && !exhausted) {
+        val top = pairCounts(vocab)
+          .orderBy(desc("cnt"), asc("a"), asc("b"))
+          .limit(1).collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val r = top.head
+          val (a, b, cnt) = (r.getString(0), r.getString(1), r.getLong(2))
+          merges += Merge(step, a, b, cnt)
+          vocab = vocab.select(applyMergeExpr(a, b).as("toks"), col("f"))
+          if (step % graft.operators.Graph.PrCkptRounds == 0 && step < numMerges) {
+            vocab = s.checkpoint(vocab)
+            s.release(lastCkpt) // superseded: the new checkpoint is materialized
+            lastCkpt = vocab
+          }
+          step += 1
         }
-        step += 1
       }
+      merges.result()
     }
-    // exhausted mid-window: make sure the RETURNED vocab is materialized
-    if (sinceCkpt > 0) {
-      vocab = vocab.localCheckpoint(true)
-      graft.Blocks.releaseLocal(lastCkpt)
-    }
-    (merges.result(), vocab)
   }
 }

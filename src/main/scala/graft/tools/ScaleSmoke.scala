@@ -219,10 +219,10 @@ object ScaleSmoke {
       .reduce(_ unionAll _)
     Bpe.train(docs1.limit(200), 2) // codegen warmup
     val t1 = System.nanoTime()
-    val (m1, _) = Bpe.train(docs1, 6)
+    val m1 = Bpe.train(docs1, 6)
     val s1 = (System.nanoTime() - t1) / 1e9
     val tN = System.nanoTime()
-    val (mN, _) = Bpe.train(docsN, 6)
+    val mN = Bpe.train(docsN, 6)
     val sN = (System.nanoTime() - tN) / 1e9
     println(f"[scale] bpe_train 1x=$s1%.2f s ${copies}x=$sN%.2f s " +
       f"(x${sN / s1}%.1f) merges=${m1.size}")
@@ -394,11 +394,11 @@ object ScaleSmoke {
       // maintained == rebuilt (set equality via symmetric difference)
       val maintained = graft.operators.Graph
         .wedgeViewMaintain(view, history, standingDeg, delta, theta)
-        .localCheckpoint(true)
       val rebuilt = graft.operators.Graph.wedgeViewBuild(e, newDeg, theta)
         .localCheckpoint(true)
       val onlyM = maintained.exceptAll(rebuilt).count()
       val onlyR = rebuilt.exceptAll(maintained).count()
+      maintained.unpersist(false)
       require(onlyM == 0 && onlyR == 0,
         s"maintained wedge view != rebuilt at theta=$theta: $onlyM maintained-only, $onlyR rebuilt-only rows")
       // per-edge worst-case audit: the bounded form's standing expansion

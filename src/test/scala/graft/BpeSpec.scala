@@ -46,7 +46,7 @@ class BpeSpec extends AnyFunSuite {
 
   private def trained(texts: Seq[String], n: Int): (Seq[Bpe.Merge], Seq[(String, String, Long)]) = {
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val (merges, _) = Bpe.train(docs, n)
+    val merges = Bpe.train(docs, n)
     val words = texts.flatMap(_.toLowerCase.split("\\s+")).filter(_.nonEmpty)
     (merges, refTrain(words, n))
   }
@@ -81,10 +81,22 @@ class BpeSpec extends AnyFunSuite {
 
   test("fixture corpus: Spark trainer equals the reference on 6 merges") {
     val docs = spark.read.parquet(TestSpark.sf("sf0.001") + "/documents.parquet")
-    val (merges, _) = Bpe.train(docs, 6)
+    val merges = Bpe.train(docs, 6)
     val words = docs.select("text").as[String].collect().toSeq
       .flatMap(_.toLowerCase.split("\\s+")).filter(_.nonEmpty)
     assert(merges.map(m => (m.a, m.b, m.cnt)) == refTrain(words, 6))
     assert(merges.size == 6)
+  }
+
+  test("training leaves no persistent RDD behind") {
+    // every vocab checkpoint is released when training returns: the
+    // caller gets the merge table only, so nothing is left to the GC
+    val docs = Seq("low low lower newest widest", "lower newest newest")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
+    val merges = Bpe.train(docs, 5)
+    assert(merges.size == 5)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- baseline
+    assert(left.isEmpty, s"Bpe.train left ${left.size} persistent RDDs")
   }
 }

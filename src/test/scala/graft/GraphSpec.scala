@@ -301,47 +301,58 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("graph builders release their checkpointed intermediates deterministically") {
-    // r15 (DedupSpec's discipline applied to the graph family): the
-    // iterative builders localCheckpoint per round and must release dead
-    // rounds + standing relations via Blocks.releaseLocal, NOT wait for
-    // the ContextCleaner — a long-lived driver calling them repeatedly
-    // would otherwise accrete blocks until GC. Census builders return
-    // driver-side rows, so they may leave NOTHING; result-returning
-    // builders may leave exactly the result's own checkpoint, released by
-    // the caller through the same util. Exact-zero bounds: GC-independent.
+    // DedupSpec's discipline applied to the graph family: the builders pin
+    // standing relations and per-round frames through a Blocks.scope,
+    // which retires each dead round as the loop advances and the rest at
+    // exit, NOT via the ContextCleaner — a long-lived driver calling them
+    // repeatedly would otherwise accrete blocks until GC. Census and
+    // one-row builders return driver-side rows, so they may leave
+    // NOTHING; result-returning builders may leave exactly the result's
+    // own checkpoint, released by the caller through Blocks.releaseLocal.
+    // Exact-zero bounds: GC-independent.
     import org.apache.spark.sql.functions.col
     val edges = cliqueTail.toDF("a", "b")
     spark.catalog.clearCache()
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
     def extras() = spark.sparkContext.getPersistentRDDs.keySet -- baseline
 
-    // census forms: everything is dead when the rows come back
-    Graph.kCore(edges, k = 3, rounds = 3).count()
-    assert(extras().isEmpty, s"kCore left ${extras().size} persistent RDDs")
-    Graph.kTruss(edges, k = 4, rounds = 2).count()
-    assert(extras().isEmpty, s"kTruss left ${extras().size} persistent RDDs")
-    Graph.labelPropagationCensus(edges, rounds = 3).count()
-    assert(extras().isEmpty,
-      s"labelPropagationCensus left ${extras().size} persistent RDDs")
+    // census and one-row forms: everything is dead when the rows come back
+    val (delta, history) = cliqueTail.partition { case (a, b) => (a + b) % 3 == 0 }
+    val (hDf, dDf) = (history.toDF("a", "b"), delta.toDF("a", "b"))
+    val labels = (1L to 8L).map(n => (n, n % 2)).toDF("node", "label")
+    val degs = history.flatMap { case (a, b) => Seq(a, b) }
+      .groupBy(identity).map { case (u, us) => (u, us.size.toLong) }.toSeq
+      .toDF("u", "dg")
+    val view = Graph.wedgeViewBuild(hDf, degs, theta = 2L)
+    Seq[(String, () => Any)](
+      "kCore" -> (() => Graph.kCore(edges, k = 3, rounds = 3).count()),
+      "kTruss" -> (() => Graph.kTruss(edges, k = 4, rounds = 2).count()),
+      "labelPropagationCensus" ->
+        (() => Graph.labelPropagationCensus(edges, rounds = 3).count()),
+      "modularity" -> (() => Graph.modularity(edges, labels).collect()),
+      "triangleStats" -> (() => Graph.triangleStats(edges).collect()),
+      "triangleInsert" -> (() =>
+        Graph.triangleInsert(hDf, dDf, 0L, Some(degs)).collect()),
+      "triangleInsertBounded" -> (() =>
+        Graph.triangleInsertBounded(hDf, dDf, 0L, degs, view, 2L).collect())
+    ).foreach { case (name, run) =>
+      run()
+      assert(extras().isEmpty, s"$name left ${extras().size} persistent RDDs")
+    }
 
     // result forms: exactly the returned checkpoint lingers, caller-released
-    val pr = Graph.pageRank(
-      edges.select(col("a").as("src"), col("b").as("dst")), iters = 3)
-    assert(extras().size == 1,
-      s"pageRank left ${extras().size} persistent RDDs beyond its result")
-    Blocks.releaseLocal(pr)
-    assert(extras().isEmpty, "pageRank result release did not clear the block")
-    val lp = Graph.labelPropagation(edges, rounds = 3)
-    assert(extras().size == 1,
-      s"labelPropagation left ${extras().size} persistent RDDs beyond its result")
-    Blocks.releaseLocal(lp)
-    assert(extras().isEmpty,
-      "labelPropagation result release did not clear the block")
-    val core = Graph.kCoreFixpoint(edges, k = 3)
-    assert(extras().size == 1,
-      s"kCoreFixpoint left ${extras().size} persistent RDDs beyond its result")
-    Blocks.releaseLocal(core)
-    assert(extras().isEmpty,
-      "kCoreFixpoint result release did not clear the block")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (() => Graph.pageRank(
+        edges.select(col("a").as("src"), col("b").as("dst")), iters = 3)),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, rounds = 3)),
+      "labelPropagationFixpoint" -> (() => Graph.labelPropagationFixpoint(edges)),
+      "kCoreFixpoint" -> (() => Graph.kCoreFixpoint(edges, k = 3))
+    ).foreach { case (name, build) =>
+      val result = build()
+      assert(extras().size == 1,
+        s"$name left ${extras().size} persistent RDDs beyond its result")
+      Blocks.releaseLocal(result)
+      assert(extras().isEmpty, s"$name result release did not clear the block")
+    }
   }
 }

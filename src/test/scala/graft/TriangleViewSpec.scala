@@ -137,13 +137,20 @@ class TriangleViewSpec extends AnyFunSuite {
       cands.max // maximize the chance old-heavy and promoted pairs coexist
     }
     def viewMap(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Long)].collect()
+      try df.as[(Long, Long, Long)].collect()
         .map { case (u, v, w) => (u, v) -> w }.toMap
+      finally df.unpersist(false) // a maintained view is a one-shot result
     val v0 = Graph.wedgeViewBuild(edgeDf(history), degDf(history), theta)
-    val maintained = viewMap(Graph.wedgeViewMaintain(
-      v0, edgeDf(history), degDf(history), edgeDf(delta), theta))
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
+    val maintainedDf = Graph.wedgeViewMaintain(
+      v0, edgeDf(history), degDf(history), edgeDf(delta), theta)
+    val maintained = viewMap(maintainedDf)
     assert(maintained == heavyPairWedges(all, theta),
       s"maintained view != rebuilt view at theta=$theta")
+    // one-shot result: once viewMap has unpersisted it, none of its
+    // intermediate checkpoints is left for the ContextCleaner
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- baseline
+    assert(left.isEmpty, s"wedgeViewMaintain left ${left.size} persistent RDDs")
     // idempotent: re-applying the same delta (even orientation-flipped)
     // against the updated standing state changes nothing
     val again = viewMap(Graph.wedgeViewMaintain(
@@ -161,6 +168,7 @@ class TriangleViewSpec extends AnyFunSuite {
     val after2 = viewMap(Graph.wedgeViewMaintain(
       after1, edgeDf(mid), degDf(mid), chunks._2.toDF("a", "b"), theta))
     assert(after2 == heavyPairWedges(all, theta))
+    after1.unpersist(false)
   }
 
   test("degenerate cases: empty delta, empty view, all-light graph") {
