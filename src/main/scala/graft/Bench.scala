@@ -97,8 +97,8 @@ import org.apache.spark.sql.SparkSession
   *     3-query same-family shard instead of three singleton JVMs.
   *     Likewise the 13-query ANN/semantic family shares one shard whose
   *     worker arms `graft.sim.TrainingMemo`: the deterministic k-means /
-  *     PQ trainings (which DOMINATE those queries — ProfilePq: 3.3 s IVF
-  *     + 2.1 s PQ of a 4.0 s query) derive once per JVM during an
+  *     PQ trainings (which DOMINATE those queries — profiled at sf0.1:
+  *     3.3 s IVF + 2.1 s PQ of a 4.0 s query) derive once per JVM during an
   *     untimed target-SF pre-pass, and each query then times its
   *     scan/encode/rank work over standing trained state — the
   *     production IndexStore shape. Hoist seconds ride along as
@@ -196,14 +196,7 @@ object Bench {
     else parentMain()
 
   private def newSession(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Without periodic GC the ContextCleaner can't keep up on big heaps
-      // over a multi-query run (see GraftSession).
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
@@ -511,7 +504,7 @@ object Bench {
 
   /** The ANN / semantic-dedup family: every registry query that trains a
     * k-means coarse quantizer or PQ codebooks inline. Training dominates
-    * each (ProfilePq: IVF 3.3 s + PQ 2.1 s at sf0.1) and is deterministic
+    * each (profiled: IVF 3.3 s + PQ 2.1 s at sf0.1) and is deterministic
     * driver state, so the family shares one shard whose worker arms
     * `graft.sim.TrainingMemo` and runs each query once UNTIMED at the
     * target SF to populate the memo with exactly the keys the timed

@@ -30,26 +30,17 @@ object GraftSession {
       .config("spark.cleaner.periodicGC.interval", "60s")
       .config("spark.ui.enabled", "false")
 
-  /** Apply engine-required confs to an externally-built session (driver owns
-    * the session in Verify/Bench; these are safe to set at runtime). */
+  /** Apply the engine's runtime confs and register its SQL functions
+    * ([[GraftExtensions.functions]]) on any session, including one this
+    * library did not build (spark-submit owns it in `cli.Sessions`). */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     // Guarded: tune() runs per query; re-registering WARNs on every call.
-    if (!spark.catalog.functionExists("rolling_hash_min"))
-      graft.functions.RollingHashMin.register(spark)
-    if (!spark.catalog.functionExists("vec_dot"))
-      graft.functions.VecDot.register(spark)
-    if (!spark.catalog.functionExists("minhash_sigs"))
-      graft.functions.MinHashSigs.register(spark)
-    if (!spark.catalog.functionExists("word_minhash_sigs"))
-      graft.functions.WordMinHashSigs.register(spark)
-    if (!spark.catalog.functionExists("simhash_sig"))
-      graft.functions.SimHashSig.register(spark)
-    if (!spark.catalog.functionExists("winnow"))
-      graft.functions.Winnow.register(spark)
-    if (!spark.catalog.functionExists("hilbert_xy"))
-      graft.functions.HilbertXY.register(spark)
+    GraftExtensions.functions.foreach { case (id, info, build) =>
+      if (!spark.catalog.functionExists(id.funcName))
+        spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
     spark
   }
 }

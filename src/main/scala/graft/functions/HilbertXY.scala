@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native Catalyst expression: 2-D Hilbert curve index (Hilbert 1891; the
@@ -93,19 +91,4 @@ object HilbertXY {
                   FROM h${r - 1}))"""
     }.mkString(",\n")
   }
-
-  /** Register `hilbert_xy(x, y, bits)` for SQL / expr() use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hilbert_xy"),
-      new ExpressionInfo(classOf[HilbertXY].getName, "hilbert_xy"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 3, "hilbert_xy(x, y, bits)")
-        val b = exprs(2) match {
-          case e if e.foldable => e.eval().asInstanceOf[Number].intValue()
-          case _ => throw new IllegalArgumentException("bits must be a literal")
-        }
-        require(b >= 1 && b <= 31, s"bits must be in [1, 31], got $b")
-        HilbertXY(exprs.head, exprs(1), b)
-      })
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -110,28 +108,5 @@ object MinHashSigs {
       i += 1
     }
     new GenericArrayData(mins)
-  }
-
-  /** Register `minhash_sigs(str, n, k)` and `scramble61(h, idx)` for
-    * SQL / call_function use. */
-  def register(spark: SparkSession): Unit = {
-    def lit(e: Expression, what: String): Int = e match {
-      case f if f.foldable => f.eval().asInstanceOf[Number].intValue()
-      case _ => throw new IllegalArgumentException(s"$what must be a literal")
-    }
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 3, "minhash_sigs(str, n, k)")
-        MinHashSigs(exprs.head, lit(exprs(1), "n"), lit(exprs(2), "k"))
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("scramble61"),
-      new ExpressionInfo(classOf[Scramble61].getName, "scramble61"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "scramble61(h, idx)")
-        Scramble61(exprs.head, lit(exprs(1), "idx"))
-      })
   }
 }

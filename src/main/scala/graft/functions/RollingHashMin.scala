@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -62,18 +60,4 @@ object RollingHashMin {
     }
     min
   }
-
-  /** Register `rolling_hash_min(str, n)` for SQL / expr() use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("rolling_hash_min"),
-      new ExpressionInfo(classOf[RollingHashMin].getName, "rolling_hash_min"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "rolling_hash_min(str, n)")
-        val n = exprs(1) match {
-          case e if e.foldable => e.eval().asInstanceOf[Number].intValue()
-          case _ => throw new IllegalArgumentException("n must be a literal")
-        }
-        RollingHashMin(exprs.head, n)
-      })
 }

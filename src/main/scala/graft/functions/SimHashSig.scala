@@ -2,9 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -104,20 +102,5 @@ object SimHashSig {
       b += 1
     }
     sim
-  }
-
-  /** Register `simhash_sig(str, bits)` for SQL / call_function use. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimHashSig].getName, "simhash_sig"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "simhash_sig(str, bits)")
-        val bits = exprs(1) match {
-          case f if f.foldable => f.eval().asInstanceOf[Number].intValue()
-          case _ => throw new IllegalArgumentException("bits must be a literal")
-        }
-        SimHashSig(exprs.head, bits)
-      })
   }
 }

@@ -19,7 +19,7 @@ object VectorOps {
     * codegen'd [[VecDot]] expression (identical fold order to the
     * `aggregate(zip_with(...))` HOF formulation it replaced, which is
     * CodegenFallback and pays interpreted dispatch per row). Requires
-    * [[VecDot.register]] (GraftSession.tune does it). */
+    * `vec_dot` registered ([[graft.GraftExtensions.functions]]). */
   def dot(a: Column, b: Column): Column =
     call_function("vec_dot", asDouble(a), asDouble(b))
 

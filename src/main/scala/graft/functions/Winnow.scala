@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -149,24 +147,4 @@ object Winnow {
                          AND win.h = sel.mh
         GROUP BY win.doc_id, win.j, sel.mh)"""
   }
-
-  /** Register `winnow(str, k, w)` for SQL / expr() use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("winnow"),
-      new ExpressionInfo(classOf[Winnow].getName, "winnow"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 3, "winnow(str, k, w)")
-        def intLit(e: Expression, name: String): Int = e match {
-          case x if x.foldable => x.eval().asInstanceOf[Number].intValue()
-          case _ => throw new IllegalArgumentException(s"$name must be a literal")
-        }
-        val k = intLit(exprs(1), "k")
-        val w = intLit(exprs(2), "w")
-        // Mirrors HilbertXY's bits range check: a non-positive k/w literal
-        // would otherwise reach Winnow.compute and index byte arrays
-        // negatively, crashing executors mid-query.
-        require(k >= 1 && w >= 1, s"winnow(str, k, w): need k >= 1 and w >= 1, got k=$k w=$w")
-        Winnow(exprs.head, k, w)
-      })
 }

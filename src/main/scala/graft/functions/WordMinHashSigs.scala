@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -102,18 +100,4 @@ object WordMinHashSigs {
     }
     new GenericArrayData(mins)
   }
-
-  /** Register `word_minhash_sigs(str, n, k)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("word_minhash_sigs"),
-      new ExpressionInfo(classOf[WordMinHashSigs].getName, "word_minhash_sigs"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 3, "word_minhash_sigs(str, n, k)")
-        def lit(e: Expression): Int = e match {
-          case f if f.foldable => f.eval().asInstanceOf[Number].intValue()
-          case _ => throw new IllegalArgumentException("n and k must be literals")
-        }
-        WordMinHashSigs(exprs.head, lit(exprs(1)), lit(exprs(2)))
-      })
 }

@@ -4,9 +4,8 @@ import java.time.Instant
 import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Per-run ingest report, mirroring the reference's logged triple
   * (source rows / ingested rows / destination rows,
@@ -28,6 +27,13 @@ final case class IngestReport(sourceRows: Long, ingestedRows: Long, destinationR
   *  - Scratch-table materialization before overwriting the destination —
   *    overwriting a table that feeds the plan is illegal
   *    (spark_loaders.py:246-262).
+  *
+  * Every strategy lands through one body and holds no cache: the report's
+  * source rows are the caller's pushdown count (else one count of the
+  * source), its ingested rows an `Observation` on the data-carrying write
+  * (the insert, the append, the history append), and its destination rows
+  * one count of the destination afterwards. The source is scanned once
+  * per run, by that write.
   *
   * Scale posture: the destination/watermark discovery is O(1) metadata +
   * a max() that Parquet answers from footer statistics; the only shuffle in
@@ -55,20 +61,33 @@ object Ingest {
   private def ensureDatabase(spark: SparkSession, db: String): Unit =
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
 
-  /** Case-insensitive existence check (spark_loaders.py:148-151). Spark's
-    * catalog is case-insensitive by default; normalize anyway. */
-  def tableExists(spark: SparkSession, db: String, table: String): Boolean =
-    spark.catalog.databaseExists(db) &&
-      spark.catalog.listTables(db).collect()
-        .exists(_.name.equalsIgnoreCase(table))
-
   /** Scalar high-watermark from the sink: `select max(col) from db.tbl`
     * (spark_loaders.py:153-155). Null when the table is empty. */
   def maxWatermark(spark: SparkSession, db: String, table: String, column: String): Option[Any] =
     Option(spark.table(s"`$db`.`$table`").agg(max(col(column))).head().get(0))
 
-  /** Full refresh (spark_loaders.py:113-137): tag, count, schema-only CTAS,
-    * positional insert-overwrite. */
+  /** The landing body all three strategies share: tag `delta`, hand
+    * `write` the tagged frame plus `counted`, which attaches the
+    * ingested-rows `Observation` (apply it last, right before the
+    * data-carrying write: the first action that runs it is the one it
+    * reports), then report. `knownSourceRows` is e.g. a JDBC pushdown
+    * count (jdbc_loader_spark2.py:33-35). */
+  private def land(
+      source: DataFrame, knownSourceRows: Option[Long], delta: DataFrame,
+      db: String, table: String, tag: String, tagColumn: String)(
+      write: (DataFrame, DataFrame => DataFrame) => Unit): IngestReport = {
+    val spark = source.sparkSession
+    val sourceRows = knownSourceRows.getOrElse(source.count())
+    val ingested = Observation()
+    ensureDatabase(spark, db)
+    write(delta.withColumn(tagColumn, lit(tag)), _.observe(ingested, count(lit(1)).as("n")))
+    IngestReport(sourceRows, ingested.get("n").asInstanceOf[Long],
+      spark.table(s"`$db`.`$table`").count())
+  }
+
+  /** Full refresh (spark_loaders.py:113-137): tag, schema-only CTAS,
+    * positional insert-overwrite. Only the insert is observed: the
+    * `limit 0` CTAS would otherwise be the first action to report. */
   def fullIngestion(
       spark: SparkSession,
       source: DataFrame,
@@ -78,23 +97,14 @@ object Ingest {
       tagColumn: String = DefaultTagColumn,
       overwriteTable: Boolean = false,
       format: String = "parquet",
-      knownSourceRows: Option[Long] = None): IngestReport = {
-    // A cheaper count (e.g. JDBC pushdown, jdbc_loader_spark2.py:33-35) can
-    // be injected; otherwise the report pays one scan for it.
-    val sourceRows = knownSourceRows.getOrElse(source.count())
-    val tagged = source.withColumn(tagColumn, lit(tag))
-    tagged.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ingested = tagged.count()
-      ensureDatabase(spark, db)
+      knownSourceRows: Option[Long] = None): IngestReport =
+    land(source, knownSourceRows, source, db, table, tag, tagColumn) { (tagged, counted) =>
       if (overwriteTable) spark.sql(s"DROP TABLE IF EXISTS `$db`.`$table`")
       // Schema-only CTAS — `limit 0` trick (spark_loaders.py:133) keeps the
       // destination's format/layout stable across runs.
       tagged.limit(0).write.format(format).mode("ignore").saveAsTable(s"`$db`.`$table`")
-      tagged.write.mode("overwrite").insertInto(s"`$db`.`$table`")
-      IngestReport(sourceRows, ingested, spark.table(s"`$db`.`$table`").count())
-    } finally tagged.unpersist()
-  }
+      counted(tagged).write.mode("overwrite").insertInto(s"`$db`.`$table`")
+    }
 
   /** Incremental append (spark_loaders.py:139-175): sink-derived watermark,
     * strict `>` filter, partitioned append. */
@@ -111,8 +121,7 @@ object Ingest {
       format: String = "parquet",
       knownSourceRows: Option[Long] = None,
       evolveSchema: Boolean = false): IngestReport = {
-    val sourceRows = knownSourceRows.getOrElse(source.count())
-    val exists = tableExists(spark, db, table)
+    val exists = spark.catalog.tableExists(db, table)
     val lastValue: Option[Any] =
       lastValueOverride.orElse(
         if (exists) maxWatermark(spark, db, table, incrementalColumn) else None)
@@ -120,20 +129,12 @@ object Ingest {
       case Some(v) => source.where(col(incrementalColumn) > lit(v))
       case None    => source
     }
-    val tagged0 = delta.withColumn(tagColumn, lit(tag))
-    val tagged =
-      if (exists && evolveSchema) evolveSink(spark, db, table, tagged0)
-      else tagged0
-    tagged.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ingested = tagged.count()
-      ensureDatabase(spark, db)
+    land(source, knownSourceRows, delta, db, table, tag, tagColumn) { (tagged, counted) =>
+      val batch = if (exists && evolveSchema) evolveSink(spark, db, table, tagged) else tagged
       val parts = if (outputPartitions.nonEmpty) outputPartitions else Seq(tagColumn)
-      val writer = tagged.write.format(format).partitionBy(parts: _*)
-      if (exists) writer.mode("append").saveAsTable(s"`$db`.`$table`")
-      else writer.mode("overwrite").saveAsTable(s"`$db`.`$table`")
-      IngestReport(sourceRows, ingested, spark.table(s"`$db`.`$table`").count())
-    } finally tagged.unpersist()
+      counted(batch).write.format(format).partitionBy(parts: _*)
+        .mode(if (exists) "append" else "overwrite").saveAsTable(s"`$db`.`$table`")
+    }
   }
 
   /** Schema-drift handling for appends (`evolveSchema = true`): source
@@ -186,8 +187,7 @@ object Ingest {
       knownSourceRows: Option[Long] = None,
       deltaOnlyReconcile: Boolean = true): IngestReport = {
     val histTable = s"${table}_incremental"
-    val sourceRows = knownSourceRows.getOrElse(source.count())
-    val histExists = tableExists(spark, db, histTable)
+    val histExists = spark.catalog.tableExists(db, histTable)
 
     // Watermarks from the history sink (spark_loaders.py:193-199).
     val lastIncr: Option[Any] = lastIncrementalOverride.orElse(
@@ -203,11 +203,7 @@ object Ingest {
       case (Some(i), None) => source.where(col(incrementalColumn) > lit(i))
       case _               => source
     }
-    val tagged = delta.withColumn(tagColumn, lit(tag))
-    tagged.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ingested = tagged.count()
-      ensureDatabase(spark, db)
+    land(source, knownSourceRows, delta, db, table, tag, tagColumn) { (tagged, counted) =>
       // The 100 TB mitigation (the default): bucket the history by the
       // reconcile keys so every future reconcile reads pre-clustered data
       // and plans NO Exchange — the window dedup becomes a per-bucket sort
@@ -221,32 +217,36 @@ object Ingest {
             .bucketSpec.map(_.numBuckets)
         else historyBuckets
       val writer = effectiveBuckets.foldLeft(
-        tagged.write.format(format).partitionBy(tagColumn))(
+        counted(tagged).write.format(format).partitionBy(tagColumn))(
         (w, b) => w.bucketBy(b, keyColumns.head, keyColumns.tail: _*))
-      if (histExists) writer.mode("append").saveAsTable(s"`$db`.`$histTable`")
-      else writer.mode("overwrite").saveAsTable(s"`$db`.`$histTable`")
+      writer.mode(if (histExists) "append" else "overwrite").saveAsTable(s"`$db`.`$histTable`")
 
       // Reconcile (spark_loaders.py:225-239). Deterministic tie-break:
       // ingest tag desc (later batch wins), then key columns. The reference
       // semantic rescans FULL history every run; `deltaOnlyReconcile` (the
-      // default; equivalence spec-checked) reconciles only keys touched by
-      // this delta — a semi-join the bucketed history answers without a
-      // shuffle — and every other key's current row is carried over from
-      // the destination unchanged. Cost drops from O(history) to
-      // O(delta history + destination rewrite). Pass `false` to force the
-      // reference's full-history rescan.
+      // default; equivalence spec-checked) reconciles only the keys of
+      // this run's tag partition and of every partition at or above the
+      // destination's newest tag — this delta even under a reused or
+      // out-of-order tag, plus what a died run appended at or above that
+      // tag but never reconciled. That is a partition-pruned semi-join the
+      // bucketed history answers without a shuffle, and every other key's
+      // current row is carried over from the destination unchanged. Cost
+      // drops from O(history) to O(delta history + destination rewrite).
+      // Pass `false` to force the reference's full-history rescan.
       val history = spark.table(s"`$db`.`$histTable`")
       def reconcileOf(h: DataFrame) = Reconcile.reconcile(
         h, keyColumns, lastModifiedColumn,
         tieBreak = tagColumn +: keyColumns,
         softDeleteCol = deletedColumn)
-      val destExists = tableExists(spark, db, table)
       val reconciled =
-        if (deltaOnlyReconcile && destExists) {
-          val deltaKeys = tagged.select(keyColumns.map(col): _*).distinct()
-          val touched = history.join(deltaKeys, keyColumns, "left_semi")
+        if (deltaOnlyReconcile && spark.catalog.tableExists(db, table)) {
+          val fresh = maxWatermark(spark, db, table, tagColumn)
+            .fold(history)(t =>
+              history.where(col(tagColumn) >= lit(t) || col(tagColumn) === lit(tag)))
+          val touchedKeys = fresh.select(keyColumns.map(col): _*).distinct()
+          val touched = history.join(touchedKeys, keyColumns, "left_semi")
           val untouched = spark.table(s"`$db`.`$table`")
-            .join(deltaKeys, keyColumns, "left_anti")
+            .join(touchedKeys, keyColumns, "left_anti")
           reconcileOf(touched).unionByName(untouched)
         } else reconcileOf(history)
 
@@ -263,7 +263,6 @@ object Ingest {
       staged.limit(0).write.format(format).mode("ignore").saveAsTable(s"`$db`.`$table`")
       staged.write.mode("overwrite").insertInto(s"`$db`.`$table`")
       spark.sql(s"DROP TABLE IF EXISTS $scratch")
-      IngestReport(sourceRows, ingested, spark.table(s"`$db`.`$table`").count())
-    } finally tagged.unpersist()
+    }
   }
 }

@@ -1886,16 +1886,14 @@ object TextQueries {
     // language docs scoring ≤ this bin), so the column is a drop-in
     // mixture-preserving normalized feature.
     "quality_percentile_binned" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, d) => graft.Blocks.scope { scope =>
         // the regex-heavy scoring projection feeds BOTH the CDF build and
         // the join back — persist the narrow (doc_id, lang, bin) so the
         // corpus text is scored once; both plan branches then read the
-        // same InMemoryRelation (the quality_gate pattern). The cache
-        // intentionally outlives the builder: the returned plan reads it.
-        val scored = t(s, d, "documents")
+        // same InMemoryRelation (the quality_gate pattern)
+        val scored = scope.persist(t(s, d, "documents")
           .select(col("doc_id"), col("lang"),
-            round(TextAnalysis.qualityScore(col("text")), 3).as("bin"))
-          .persist()
+            round(TextAnalysis.qualityScore(col("text")), 3).as("bin")))
         val cnt = scored.groupBy("lang", "bin").agg(count(lit(1)).as("c"))
         val wc = Window.partitionBy("lang").orderBy("bin")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1906,9 +1904,9 @@ object TextQueries {
           .select(col("lang"), col("bin"),
             round(col("cum").cast("double") / col("tot").cast("double"), 6)
               .as("q_pct"))
-        scored.join(cdf, Seq("lang", "bin"))
+        scope.result(scored.join(cdf, Seq("lang", "bin"))
           .select(col("doc_id"), col("lang"), col("bin"), col("q_pct"))
-          .orderBy("doc_id")
+          .orderBy("doc_id"))
       },
       oracle = Some(s"""
         WITH sc AS (
@@ -2899,7 +2897,7 @@ object TextQueries {
         // checkpointed, N = Σc from the aggregate, eager materialization
         // + deterministic release — removed one of the three tokenize
         // scans but measured SLOWER in the interleaved same-JVM A/B
-        // (0.73-0.92 s → 1.05-1.47 s, graft.tools.TextAb): the checkpoint
+        // (0.73-0.92 s → 1.05-1.47 s): the checkpoint
         // materialization job plus losing the lazy count()'s column
         // pruning cost more than the saved page-cached scan at sf0.1.
         // Kept the lazy three-scan form.)
@@ -2953,7 +2951,7 @@ object TextQueries {
         // "w1 w2" concat keys in one explode — and a middle form keeping
         // two-column grouping but re-aggregating ctx from a checkpointed
         // bcnt were interleave-A/B'd and LOST (old 1.19-2.02 s vs
-        // 2.21-2.46 / 1.76-2.53 s, graft.tools.TextAb): at sf0.1 the
+        // 2.21-2.46 / 1.76-2.53 s): at sf0.1 the
         // checkpoint materialization job plus the eager persist (which
         // forfeits the lazy count()'s pruning) cost more than the saved
         // page-cached scans. Kept the lazy multi-scan form; the sibling

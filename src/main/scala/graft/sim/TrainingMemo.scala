@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Every ANN / semantic-dedup registry query re-trains its coarse
   * quantizer and codebooks inline each pass, and training dominates the
-  * query (ProfilePq at sf0.1: IVF 3.3 s + PQ 2.1 s of a 4.0 s IVF-PQ
+  * query (profiled at sf0.1: IVF 3.3 s + PQ 2.1 s of a 4.0 s IVF-PQ
   * query) — while the production shape trains ONCE and serves the
   * standing k×dim driver-state to every consumer (the [[IndexStore]]
   * build-once path). When armed (system property

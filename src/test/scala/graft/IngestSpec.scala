@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +24,14 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def ts(s: String) = Timestamp.valueOf(s)
   private val t0 = ts("2024-01-01 00:00:00")
   private val t1 = ts("2024-01-02 00:00:00")
+
+  /** A 4-bucket merge into `ingest_test.<tbl>`, delta-only or full reconcile. */
+  private def merge(tbl: String, deltaOnly: Boolean)(src: DataFrame, tag: String) =
+    Ingest.incrementalMerge(
+      spark, src, "ingest_test", tbl, keyColumns = Seq("id"),
+      lastModifiedColumn = "last_modified", incrementalColumn = "id",
+      tag = tag, deletedColumn = Some("deleted"),
+      historyBuckets = Some(4), deltaOnlyReconcile = deltaOnly)
 
   override def afterAll(): Unit = {
     spark.sql("DROP DATABASE IF EXISTS ingest_test CASCADE")
@@ -82,6 +91,10 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r2 == operators.IngestReport(20, 10, 20))
     val dest = spark.table("ingest_test.data_append")
     assert(dest.where($"id" < 10 && $"dl_ingest_date" === "20240102T000000").count() == 0)
+    // batch 3 re-sends the same rows: an empty delta still reports 0
+    val r3 = Ingest.incrementalAppend(spark, b2, "ingest_test", "data_append",
+      incrementalColumn = "id", tag = "20240103T000000", outputPartitions = Seq("date"))
+    assert(r3 == operators.IngestReport(20, 0, 20))
   }
 
   test("incremental merge: upsert, null-last_modified insert, soft delete") {
@@ -137,12 +150,6 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("delta-only reconcile matches full reconcile across the merge scenario") {
-    def merge(tbl: String, deltaOnly: Boolean)(src: DataFrame, tag: String) =
-      Ingest.incrementalMerge(
-        spark, src, "ingest_test", tbl, keyColumns = Seq("id"),
-        lastModifiedColumn = "last_modified", incrementalColumn = "id",
-        tag = tag, deletedColumn = Some("deleted"),
-        historyBuckets = Some(4), deltaOnlyReconcile = deltaOnly)
     val full = merge("d_full", deltaOnly = false) _
     val fast = merge("d_fast", deltaOnly = true) _
 
@@ -161,6 +168,42 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a.count() == 10 && b.count() == 10) // 11 keys, id=5 soft-deleted
     assert(a.except(b).count() == 0 && b.except(a).count() == 0,
       "delta-only reconcile diverged from the full reconcile")
+  }
+
+  test("delta-only merge reconciles reused and older tags and died runs' history rows") {
+    val b1 = rows((0 until 10).map(i =>
+      (i, s"v$i", ts("2024-01-01 10:00:00"), t0, "2024-01-01", None: Option[Int])): _*)
+    val b2 = rows((2, "X", ts("2024-01-02 10:00:00"), t0, "2024-01-01", None))
+    val b3 = rows((11, "Y", ts("2024-01-03 10:00:00"), t0, "2024-01-01", None))
+    // what died runs leave: their delta is in history, but the destination
+    // was never rewritten; one ran under the destination's newest tag
+    val diedAtNewest = rows((4, "Z", ts("2024-01-04 10:00:00"), t0, "2024-01-01", None))
+    val diedLater = rows(
+      (3, "K", ts("2024-01-05 10:00:00"), t0, "2024-01-01", None),
+      (10, "v10", ts("2024-01-05 10:00:00"), t0, "2024-01-02", None))
+    // the retry re-sends their rows, which the history watermarks now
+    // drop, and soft-deletes id=5
+    val retry = diedAtNewest.unionByName(diedLater)
+      .unionByName(rows((5, "v5", ts("2024-01-06 10:00:00"), t0, "2024-01-01", Some(1))))
+    Seq("r_full" -> false, "r_fast" -> true).foreach { case (tbl, deltaOnly) =>
+      merge(tbl, deltaOnly)(b1, "20240102T000000")
+      // same tag as the destination's newest partition
+      assert(merge(tbl, deltaOnly)(b2, "20240102T000000").ingestedRows == 1)
+      // a tag that sorts below the destination's newest one
+      assert(merge(tbl, deltaOnly)(b3, "20240101T000000").ingestedRows == 1)
+      Seq(diedAtNewest -> "20240102T000000", diedLater -> "20240105T000000").foreach {
+        case (d, tag) =>
+          d.withColumn("dl_ingest_date", lit(tag))
+            .write.format("parquet").partitionBy("dl_ingest_date").bucketBy(4, "id")
+            .mode("append").saveAsTable(s"ingest_test.${tbl}_incremental")
+      }
+      assert(merge(tbl, deltaOnly)(retry, "20240106T000000").ingestedRows == 1)
+    }
+    val a = spark.table("ingest_test.r_full")
+    val b = spark.table("ingest_test.r_fast")
+    assert(a.count() == 11 && a.where($"value".isin("X", "Y", "Z", "K", "v10")).count() == 5)
+    assert(a.except(b).count() == 0 && b.except(a).count() == 0,
+      "the delta-only merge diverged from the full-history reconcile")
   }
 
   test("DEFAULT merge path: history key-bucketed, repeat reconcile plans no Exchange") {

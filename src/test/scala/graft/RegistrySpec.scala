@@ -30,6 +30,15 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("quality_percentile_binned leaves no cached plan once its result is released") {
+    spark.catalog.clearCache()
+    val r = SparkEntry.queries("quality_percentile_binned")(spark, TestSpark.sf("sf0.001"))
+    assert(r.collect().nonEmpty)
+    r.unpersist()
+    assert(org.apache.spark.sql.CacheStateProbe.cacheIsEmpty(spark),
+      "the scoring persist outlived the query's result")
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"query $name runs at sf0.001 and returns rows") {
       assert(fn(spark, TestSpark.sf("sf0.001")).count() > 0)
